@@ -24,10 +24,8 @@ import org.apache.spark.sql.types._
   */
 object AudioCorpus {
 
-  val dir = "/tmp/graft_audio_corpus_v2"
+  val dir: String = Fixtures.entry("audio")
   val table = s"$dir/audio.parquet"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
 
   val Rate = 8000
 
@@ -97,11 +95,8 @@ object AudioCorpus {
     buf.array()
   }
 
-  /** Build the corpus if absent (idempotent, cross-JVM via _READY marker). */
-  def ensure(spark: SparkSession): Unit = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) ingest.FsUtil.deleteTree(p)
+  /** Build the corpus if absent (once per build, see [[Fixtures]]). */
+  def ensure(spark: SparkSession): Unit = Fixtures.published("audio") { tmp =>
     val schema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("sample_rate", IntegerType, nullable = false),
@@ -111,7 +106,6 @@ object AudioCorpus {
       Row(id.toLong, Rate, wavOf(s), s.toSeq)
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.mode("overwrite").parquet(table)
-    java.nio.file.Files.createFile(marker)
+      .write.mode("overwrite").parquet(s"$tmp/audio.parquet")
   }
 }

@@ -29,20 +29,7 @@ object Bench {
     // a corpus-build failure surfaces as every dependent query timing -1.0;
     // one stderr line per failure names the culprit instead of leaving
     // only that symptom
-    Seq[(String, SparkSession => Any)](
-      ("StixCorpus", StixCorpus.ensure), ("TranslateCorpus", TranslateCorpus.ensure),
-      ("WoodCorpus", WoodCorpus.ensure), ("MediaCorpus", MediaCorpus.ensure),
-      ("AudioCorpus", AudioCorpus.ensure), ("VideoCorpus", VideoCorpus.ensure),
-      ("DeltaCorpus", DeltaCorpus.ensure), ("UnicodeCorpus", UnicodeCorpus.ensure),
-      ("ZoneCorpus", ZoneCorpus.ensure)
-    ).foreach { case (name, ensure) =>
-      try { ensure(spark); () }
-      catch {
-        case t: Throwable =>
-          System.err.println(s"[bench] corpus $name failed: ${t.getClass.getSimpleName}: " +
-            String.valueOf(t.getMessage).take(200))
-      }
-    }
+    Fixtures.ensureAll(spark, "bench")
     // FIXED-WORK CALIBRATION PROBE: a deterministic synthetic query on
     // constant data (64M md5-over-string rows, partitioned to the worker
     // count), timed as min-of-3 after one untimed JIT pass. Its wall time
@@ -109,14 +96,15 @@ object Bench {
     // boundaries from part numbers — a lost part-1 line used to let the
     // second run's remaining chunks merge silently into the stale run
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    // the complete one-line record (identical to BENCH_SELF.json's content):
+    // the complete one-line record (identical to BENCH_SELF.json's content,
+    // and carrying the same run id as the chunk lines):
     // the driver parses ONE stdout JSON line with the full `queries` map —
     // the chunked lines alone left PERF_r14-r16 empty ("parsed": null), so
     // per-query regressions went officially uncounted for three rounds.
     // Printed LAST: a tail-capture window keeps it, and the chunked lines
     // above still survive any window that would truncate this one.
     val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"calib_sec":${r3(calib)},"queries":${qJson(results)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","run":"$runId","value":${r3(total)},"unit":"sec","reps":$reps,"calib_sec":${r3(calib)},"queries":${qJson(results)},"sf":"$sfDir"}"""
     val lines =
       chunks.zipWithIndex.map { case (chunk, i) =>
         s"""{"metric":"chunk","run":"$runId","part":${i + 1},"parts":${chunks.size},"queries":${qJson(chunk)}}"""

@@ -14,19 +14,13 @@ import org.apache.spark.sql.functions._
   */
 object DeltaCorpus {
 
-  val dir = "/tmp/graft_delta_corpus_v1"
+  val dir: String = Fixtures.entry("delta")
   val table = "piled"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
 
   val BaseRows = 40000
   val RowsPerBatch = 1000
 
-  def ensure(spark: SparkSession): Unit = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) ingest.FsUtil.deleteTree(p)
-    java.nio.file.Files.createDirectories(p)
+  def ensure(spark: SparkSession): Unit = Fixtures.published("delta") { tmp =>
     def batch(tag: String, n: Int, from: Int) =
       spark.range(n).select(
         concat(lit(s"$tag-"), (col("id") + from).cast("string")).as("id"),
@@ -34,11 +28,10 @@ object DeltaCorpus {
     // base load, then DeltaFilesMax pure-insert batches: each batch's new
     // ids hash across all buckets, so every bucket gains ONE delta file
     // per batch and none crosses the compaction threshold
-    UpsertWriter.insertIgnore(spark, dir, table, batch("base", BaseRows, 0))
+    UpsertWriter.insertIgnore(spark, tmp, table, batch("base", BaseRows, 0))
     (0 until UpsertWriter.DeltaFilesMax).foreach { b =>
       UpsertWriter.insertIgnore(
-        spark, dir, table, batch(s"delta$b", RowsPerBatch, 0))
+        spark, tmp, table, batch(s"delta$b", RowsPerBatch, 0))
     }
-    java.nio.file.Files.createFile(marker)
   }
 }

@@ -25,10 +25,8 @@ import javax.imageio.ImageIO
   */
 object MediaCorpus {
 
-  val dir = "/tmp/graft_media_corpus_v1"
+  val dir: String = Fixtures.entry("media")
   val table = s"$dir/images.parquet"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
 
   val W = 36
   val H = 32
@@ -77,11 +75,8 @@ object MediaCorpus {
     bos.toByteArray
   }
 
-  /** Build the corpus if absent (idempotent, cross-JVM via _READY marker). */
-  def ensure(spark: SparkSession): Unit = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) ingest.FsUtil.deleteTree(p)
+  /** Build the corpus if absent (once per build, see [[Fixtures]]). */
+  def ensure(spark: SparkSession): Unit = Fixtures.published("media") { tmp =>
     val schema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("width", IntegerType, nullable = false),
@@ -92,7 +87,6 @@ object MediaCorpus {
       Row(id.toLong, W, H, pngOf(px), px.toSeq)
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.mode("overwrite").parquet(table)
-    java.nio.file.Files.createFile(marker)
+      .write.mode("overwrite").parquet(s"$tmp/images.parquet")
   }
 }

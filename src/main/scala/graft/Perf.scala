@@ -46,16 +46,7 @@ object Perf {
       try SparkEntry.queries(q)(spark, sfDir).count()
       catch { case t: Throwable => System.err.println(s"[perf] warmup $q failed: $t") }
     }
-    Seq[(String, SparkSession => Any)](
-      ("StixCorpus", StixCorpus.ensure), ("TranslateCorpus", TranslateCorpus.ensure),
-      ("WoodCorpus", WoodCorpus.ensure), ("MediaCorpus", MediaCorpus.ensure),
-      ("AudioCorpus", AudioCorpus.ensure), ("VideoCorpus", VideoCorpus.ensure),
-      ("DeltaCorpus", DeltaCorpus.ensure), ("UnicodeCorpus", UnicodeCorpus.ensure),
-      ("ZoneCorpus", ZoneCorpus.ensure)
-    ).foreach { case (name, ensure) =>
-      try { ensure(spark); () }
-      catch { case t: Throwable => System.err.println(s"[perf] corpus $name failed: $t") }
-    }
+    Fixtures.ensureAll(spark, "perf")
 
     val names: Seq[String] =
       if (args.nonEmpty) args.toSeq

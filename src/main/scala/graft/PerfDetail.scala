@@ -44,13 +44,7 @@ object PerfDetail {
     Seq("q_projection", "q_dedup_minhash", "q_ann_lsh").foreach { q =>
       try SparkEntry.queries(q)(spark, sfDir).count() catch { case _: Throwable => () }
     }
-    Seq[(String, SparkSession => Any)](
-      ("StixCorpus", StixCorpus.ensure), ("TranslateCorpus", TranslateCorpus.ensure),
-      ("WoodCorpus", WoodCorpus.ensure), ("MediaCorpus", MediaCorpus.ensure),
-      ("AudioCorpus", AudioCorpus.ensure), ("VideoCorpus", VideoCorpus.ensure),
-      ("DeltaCorpus", DeltaCorpus.ensure), ("UnicodeCorpus", UnicodeCorpus.ensure),
-      ("ZoneCorpus", ZoneCorpus.ensure)
-    ).foreach { case (n, e) => try { e(spark); () } catch { case _: Throwable => () } }
+    Fixtures.ensureAll(spark, "perfdetail")
 
     args.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -19,14 +19,7 @@ object PlanDump {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Seq[(String, SparkSession => Any)](
-      ("StixCorpus", StixCorpus.ensure), ("TranslateCorpus", TranslateCorpus.ensure),
-      ("WoodCorpus", WoodCorpus.ensure), ("MediaCorpus", MediaCorpus.ensure),
-      ("AudioCorpus", AudioCorpus.ensure), ("VideoCorpus", VideoCorpus.ensure),
-      ("DeltaCorpus", DeltaCorpus.ensure), ("UnicodeCorpus", UnicodeCorpus.ensure),
-      ("ZoneCorpus", ZoneCorpus.ensure)
-    ).foreach { case (n, e) => try { e(spark); () } catch { case t: Throwable =>
-      System.err.println(s"[plandump] corpus $n failed: $t") } }
+    Fixtures.ensureAll(spark, "plandump")
     val dir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)
     names.foreach { name =>

@@ -25,14 +25,7 @@ object QProbe {
       try SparkEntry.queries(q)(spark, sfDir).count()
       catch { case t: Throwable => System.err.println(s"[qprobe] warmup $q failed: $t") }
     }
-    Seq[(String, SparkSession => Any)](
-      ("StixCorpus", StixCorpus.ensure), ("TranslateCorpus", TranslateCorpus.ensure),
-      ("WoodCorpus", WoodCorpus.ensure), ("MediaCorpus", MediaCorpus.ensure),
-      ("AudioCorpus", AudioCorpus.ensure), ("VideoCorpus", VideoCorpus.ensure),
-      ("DeltaCorpus", DeltaCorpus.ensure), ("UnicodeCorpus", UnicodeCorpus.ensure),
-      ("ZoneCorpus", ZoneCorpus.ensure)
-    ).foreach { case (n, e) => try { e(spark); () } catch { case t: Throwable =>
-      System.err.println(s"[qprobe] corpus $n failed: $t") } }
+    Fixtures.ensureAll(spark, "qprobe")
     val names = args.toSeq.filter { n =>
       val ok = SparkEntry.queries.contains(n)
       if (!ok) System.err.println(s"[qprobe] no such query: $n")

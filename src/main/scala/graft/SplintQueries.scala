@@ -12,8 +12,8 @@ import Queries.Q
   * spec-only through round 7 (reference firepit/sqlitestorage.py:323-329
   * delete; firepit/splint.py:50-221 utilities).
   *
-  * Each query drives a deterministic scratch store built once per corpus
-  * version (marker-guarded, like StixCorpus); the oracles read the
+  * Each query drives a deterministic scratch store built once per build
+  * (a [[Fixtures]] entry, like StixCorpus); the oracles read the
   * engine's own written parquet/journal from disk:
   *
   *  - q_stix_delete: ingest -> extract -> finish -> DELETE -> re-ingest;
@@ -32,15 +32,13 @@ import Queries.Q
   */
 object SplintQueries {
 
-  private val dir = "/tmp/graft_splint_corpus_v1"
+  private val dir = Fixtures.entry("splint")
   private val deleteWD = s"$dir/del_store"
   private val origWD = s"$dir/shift_orig"
   private val shiftWD = s"$dir/shift_new"
   private val rawWD = s"$dir/dedup_raw"
   private val dedupWD = s"$dir/dedup_out"
   private val limitWD = s"$dir/limit_out"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
 
   private def t(wd: String, name: String) =
     s"read_parquet('$wd/$name.parquet/**/*.parquet', hive_partitioning=0)"
@@ -91,16 +89,13 @@ object SplintQueries {
   private[graft] val newEnd =
     java.time.Instant.ofEpochMilli(newStartMs + 2 * (oldEndMs - oldStartMs)).toString
 
-  /** Build every scratch store if absent (idempotent via _READY marker;
-    * a new Storage over a built store replays its journal). */
-  private def ensure(spark: SparkSession): Unit = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) ingest.FsUtil.deleteTree(p)
-    java.nio.file.Files.createDirectories(p)
+  /** Build every scratch store if absent (a new Storage over a built
+    * store replays its journal). */
+  private def ensure(spark: SparkSession): Unit = Fixtures.published("splint") { tmp =>
+    def wd(published: String) = tmp + published.stripPrefix(dir)
 
     // --- delete-store lifecycle: ingest, view, finish, DELETE, re-ingest
-    val del = new Storage(spark, deleteWD)
+    val del = new Storage(spark, wd(deleteWD))
     del.cache("d1", bundleOf((0 until 10).map(obs), "del-a"))
     del.extract("delp_v1", "url", "d1", null)
     del.finish()
@@ -110,21 +105,19 @@ object SplintQueries {
 
     // --- timeshift: original store + linearly remapped store
     val shiftBundle = bundleOf(shiftBundleObs, "shift")
-    new Storage(spark, origWD).cache("t1", shiftBundle)
+    new Storage(spark, wd(origWD)).cache("t1", shiftBundle)
     val shifted = BundleUtil.timeshift(
       Flatten.parseJson(shiftBundle).asInstanceOf[Map[String, Any]], newStart, newEnd)
-    new Storage(spark, shiftWD).cache("t1", StixId.canonicalJson(shifted))
+    new Storage(spark, wd(shiftWD)).cache("t1", StixId.canonicalJson(shifted))
 
     // --- dedup_ids + limit: raw bundle with planted duplicate-id objects
     val rawObjs = (0 until 10).map(obs) ++ (0 until 5).map(obs) ++ Seq(obs(10))
     val rawBundle = Flatten
       .parseJson(bundleOf(rawObjs, "dedup")).asInstanceOf[Map[String, Any]]
-    new Storage(spark, rawWD).cache("r1", StixId.canonicalJson(rawBundle))
+    new Storage(spark, wd(rawWD)).cache("r1", StixId.canonicalJson(rawBundle))
     val deduped = BundleUtil.dedupIds(rawBundle)
-    new Storage(spark, dedupWD).cache("r1", StixId.canonicalJson(deduped))
-    new Storage(spark, limitWD).cache("r1", StixId.canonicalJson(BundleUtil.limit(deduped, 4)))
-
-    java.nio.file.Files.createFile(marker)
+    new Storage(spark, wd(dedupWD)).cache("r1", StixId.canonicalJson(deduped))
+    new Storage(spark, wd(limitWD)).cache("r1", StixId.canonicalJson(BundleUtil.limit(deduped, 4)))
   }
 
   private[graft] val all: Seq[Q] = Seq(

@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * fixture bundles with exact expected answers (tests/test_storage.py:24-147,
   * tests/test_lookup.py). The driver's DuckDB oracle can't parse STIX
   * bundles, but it CAN read the parquet tables this engine writes — so the
-  * corpus is built once into a fixed workdir, the q_stix_* queries exercise
+  * corpus is built once into a fixture store entry, the q_stix_* queries exercise
   * the verb surface (pattern compile, provenance semi-join, auto-deref
   * joins, observation joins) through the Storage API, and each oracle
   * recomputes the same answer with plain SQL over the engine's own base
@@ -36,68 +36,44 @@ import org.apache.spark.sql.SparkSession
   */
 object StixCorpus {
 
-  val dir = "/tmp/graft_stix_corpus_v3"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
+  val dir: String = Fixtures.entry("stix")
 
   /** Build the corpus if absent; returns a Storage over it. */
-  def ensure(spark: SparkSession): Storage = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return new Storage(spark, dir)
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) deleteRecursively(p)
-    val storage = new Storage(spark, dir)
-    val bundles = (0 until 6).map(bundleJson)
-    storage.cache("q1", bundles.slice(0, 4))
-    storage.cache("q2", bundles.slice(4, 6))
-    java.nio.file.Files.createFile(marker)
-    storage
-  }
+  def ensure(spark: SparkSession): Storage =
+    new Storage(spark, Fixtures.published("stix") { tmp =>
+      val storage = new Storage(spark, tmp)
+      val bundles = (0 until 6).map(bundleJson)
+      storage.cache("q1", bundles.slice(0, 4))
+      storage.cache("q2", bundles.slice(4, 6))
+    })
 
   /** The SNAPSHOT-VERB fixture store: the same six bundles, but with the
     * url table PINNED between the two ingests (cache q1 → snapshot s1 →
-    * cache q2) — marker-guarded and built once per /tmp lifetime like the
-    * main corpus, so the q_stix_snapshot row measures the verb READ path
-    * (pin vs live), not a full scratch re-ingest per rep (first cut
-    * re-ingested per invocation: 40.8 s/row at sf0.1). */
-  private val snapDir = "/tmp/graft_stixsnap_corpus_v1"
-  private val snapMarker = java.nio.file.Paths.get(snapDir, "_READY")
-
-  def ensureSnap(spark: SparkSession): Storage = lock.synchronized {
-    if (java.nio.file.Files.exists(snapMarker)) return new Storage(spark, snapDir)
-    val p = java.nio.file.Paths.get(snapDir)
-    if (java.nio.file.Files.exists(p)) deleteRecursively(p)
-    val storage = new Storage(spark, snapDir)
-    storage.cache("q1", (0 until 4).map(bundleJson))
-    storage.snapshot("url", "s1")
-    storage.cache("q2", (4 until 6).map(bundleJson))
-    java.nio.file.Files.createFile(snapMarker)
-    storage
-  }
+    * cache q2) — built once like the main corpus, so the q_stix_snapshot
+    * row measures the verb READ path (pin vs live), not a full scratch
+    * re-ingest per rep (first cut re-ingested per invocation: 40.8 s/row
+    * at sf0.1). */
+  def ensureSnap(spark: SparkSession): Storage =
+    new Storage(spark, Fixtures.published("stixsnap") { tmp =>
+      val storage = new Storage(spark, tmp)
+      storage.cache("q1", (0 until 4).map(bundleJson))
+      storage.snapshot("url", "s1")
+      storage.cache("q2", (4 until 6).map(bundleJson))
+    })
 
   /** The MULTI-TABLE snapshot fixture store: the same six bundles, with
     * url AND user-account pinned between the two ingests by ONE
     * snapshot(Seq(...), name) verb call — both pins land under
     * simultaneously-held leases, so they capture one consistent cut.
-    * Marker-guarded and built once per /tmp lifetime (the ensureSnap
-    * discipline): q_stix_snapshot_multi measures the verb READ path. */
-  private val snapMultiDir = "/tmp/graft_stixsnapmulti_corpus_v1"
-  private val snapMultiMarker = java.nio.file.Paths.get(snapMultiDir, "_READY")
-
-  def ensureSnapMulti(spark: SparkSession): Storage = lock.synchronized {
-    if (java.nio.file.Files.exists(snapMultiMarker)) return new Storage(spark, snapMultiDir)
-    val p = java.nio.file.Paths.get(snapMultiDir)
-    if (java.nio.file.Files.exists(p)) deleteRecursively(p)
-    val storage = new Storage(spark, snapMultiDir)
-    storage.cache("q1", (0 until 4).map(bundleJson))
-    storage.snapshot(Seq("url", "user-account"), "m1")
-    storage.cache("q2", (4 until 6).map(bundleJson))
-    java.nio.file.Files.createFile(snapMultiMarker)
-    storage
-  }
-
-  private[graft] def deleteDir(p: java.nio.file.Path): Unit = ingest.FsUtil.deleteTree(p)
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = ingest.FsUtil.deleteTree(p)
+    * Built once (the ensureSnap discipline): q_stix_snapshot_multi
+    * measures the verb READ path. */
+  def ensureSnapMulti(spark: SparkSession): Storage =
+    new Storage(spark, Fixtures.published("stixsnapmulti") { tmp =>
+      val storage = new Storage(spark, tmp)
+      storage.cache("q1", (0 until 4).map(bundleJson))
+      storage.snapshot(Seq("url", "user-account"), "m1")
+      storage.cache("q2", (4 until 6).map(bundleJson))
+    })
 
   private def pad(n: Long, w: Int): String = {
     val s = n.toString

@@ -779,9 +779,9 @@ object StixQueries {
     //       (id, value)), live = the full url table.
     Q("q_stix_snapshot", (spark, _) => {
       StixCorpus.ensure(spark) // the oracle reads the shared corpus tables
-      // marker-guarded fixture store (cache q1 -> PIN -> cache q2, built
-      // once): the row measures the verb READ path — a per-rep scratch
-      // re-ingest measured 40.8 s of pure setup at sf0.1
+      // fixture store (cache q1 -> PIN -> cache q2, built once): the row
+      // measures the verb READ path — a per-rep scratch re-ingest
+      // measured 40.8 s of pure setup at sf0.1
       val st = StixCorpus.ensureSnap(spark)
       st.readSnapshot("url", "s1")
         .select(lit("snap").as("side"), col("id"), col("value"))

@@ -39,14 +39,7 @@ object StreamProbe {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         println(s"[sprobe] $ts TERMINATED")
     })
-    Seq[(String, SparkSession => Any)](
-      ("StixCorpus", StixCorpus.ensure), ("TranslateCorpus", TranslateCorpus.ensure),
-      ("WoodCorpus", WoodCorpus.ensure), ("MediaCorpus", MediaCorpus.ensure),
-      ("AudioCorpus", AudioCorpus.ensure), ("VideoCorpus", VideoCorpus.ensure),
-      ("DeltaCorpus", DeltaCorpus.ensure), ("UnicodeCorpus", UnicodeCorpus.ensure),
-      ("ZoneCorpus", ZoneCorpus.ensure)
-    ).foreach { case (n, e) => try { e(spark); () } catch { case t: Throwable =>
-      System.err.println(s"[sprobe] corpus $n failed: $t") } }
+    Fixtures.ensureAll(spark, "sprobe")
     args.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[sprobe] no such query: $name")

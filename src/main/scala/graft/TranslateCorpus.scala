@@ -16,10 +16,7 @@ import org.apache.spark.sql.SparkSession
   */
 object TranslateCorpus {
 
-  // v2: dst-named __contains edges now carry rank 0 (aio/ingest.py parity)
-  val dir = "/tmp/graft_xlate_corpus_v2"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
+  val dir: String = Fixtures.entry("xlate")
 
   private val stixMapJson =
     """{
@@ -70,15 +67,10 @@ object TranslateCorpus {
 
   /** Build the corpus if absent via the DISTRIBUTED translation path;
     * returns a Storage over it. */
-  def ensure(spark: SparkSession): Storage = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return new Storage(spark, dir)
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) StixCorpus.deleteDir(p)
-    val storage = new Storage(spark, dir)
-    import spark.implicits._
-    val events = (0 until 600).map(event).toDS().repartition(4)
-    storage.cacheTranslatedEvents("xq1", events, stixMapJson, identityJson)
-    java.nio.file.Files.createFile(marker)
-    storage
-  }
+  def ensure(spark: SparkSession): Storage =
+    new Storage(spark, Fixtures.published("xlate") { tmp =>
+      import spark.implicits._
+      val events = (0 until 600).map(event).toDS().repartition(4)
+      new Storage(spark, tmp).cacheTranslatedEvents("xq1", events, stixMapJson, identityJson)
+    })
 }

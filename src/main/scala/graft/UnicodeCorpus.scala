@@ -9,14 +9,12 @@ import org.apache.spark.sql.types._
   * cleaner must strip while keeping \n and \t, plus already-clean rows
   * that must pass through byte-identical. All strings are built from
   * escape sequences (no raw control bytes in source) and the corpus is
-  * marker-guarded like the other fixture corpora.
+  * built once like the other fixture corpora.
   */
 object UnicodeCorpus {
 
-  val dir = "/tmp/graft_unicode_corpus_v1"
+  val dir: String = Fixtures.entry("unicode")
   val table = s"$dir/messy.parquet"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
 
   private[graft] def rows: Seq[(Long, String)] = {
     val templates = Seq[String](
@@ -38,18 +36,14 @@ object UnicodeCorpus {
     }
   }
 
-  /** Build the corpus if absent (idempotent, cross-JVM via _READY marker). */
-  def ensure(spark: SparkSession): Unit = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) ingest.FsUtil.deleteTree(p)
+  /** Build the corpus if absent (once per build, see [[Fixtures]]). */
+  def ensure(spark: SparkSession): Unit = Fixtures.published("unicode") { tmp =>
     val schema = StructType(Seq(
       StructField("doc_id", LongType, nullable = false),
       StructField("text", StringType, nullable = false)))
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows.map { case (id, t) => Row(id, t) }, 1),
         schema)
-      .write.mode("overwrite").parquet(table)
-    java.nio.file.Files.createFile(marker)
+      .write.mode("overwrite").parquet(s"$tmp/messy.parquet")
   }
 }

@@ -30,10 +30,8 @@ import javax.imageio.{IIOImage, ImageIO}
   */
 object VideoCorpus {
 
-  val dir = "/tmp/graft_video_corpus_v1"
+  val dir: String = Fixtures.entry("video")
   val table = s"$dir/videos.parquet"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
 
   val W = 36
   val H = 32
@@ -111,11 +109,8 @@ object VideoCorpus {
     bos.toByteArray
   }
 
-  /** Build the corpus if absent (idempotent, cross-JVM via _READY marker). */
-  def ensure(spark: SparkSession): Unit = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) ingest.FsUtil.deleteTree(p)
+  /** Build the corpus if absent (once per build, see [[Fixtures]]). */
+  def ensure(spark: SparkSession): Unit = Fixtures.published("video") { tmp =>
     val schema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("width", IntegerType, nullable = false),
@@ -129,7 +124,6 @@ object VideoCorpus {
       Row(id.toLong, W, H, fs.size, gifOf(fs), fs.map(_.toSeq))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.mode("overwrite").parquet(table)
-    java.nio.file.Files.createFile(marker)
+      .write.mode("overwrite").parquet(s"$tmp/videos.parquet")
   }
 }

@@ -16,9 +16,7 @@ import org.apache.spark.sql.SparkSession
   */
 object WoodCorpus {
 
-  val dir = "/tmp/graft_wood_corpus_v1"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
+  val dir: String = Fixtures.entry("wood")
 
   private def pad(n: Int, w: Int): String = {
     val s = n.toString
@@ -55,13 +53,8 @@ object WoodCorpus {
     }
 
   /** Build the corpus if absent; returns a Storage over it. */
-  def ensure(spark: SparkSession): Storage = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return new Storage(spark, dir)
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) StixCorpus.deleteDir(p)
-    val storage = new Storage(spark, dir)
-    storage.cache("wq1", LogMapper.toBundleJson(events, LogMapper.SysmonMapper))
-    java.nio.file.Files.createFile(marker)
-    storage
-  }
+  def ensure(spark: SparkSession): Storage =
+    new Storage(spark, Fixtures.published("wood") { tmp =>
+      new Storage(spark, tmp).cache("wq1", LogMapper.toBundleJson(events, LogMapper.SysmonMapper))
+    })
 }

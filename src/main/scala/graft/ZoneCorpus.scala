@@ -15,23 +15,17 @@ import org.apache.spark.sql.functions._
   */
 object ZoneCorpus {
 
-  val dir = "/tmp/graft_zone_corpus_v1"
-  private val marker = java.nio.file.Paths.get(dir, "_READY")
-  private val lock = new Object
+  val dir: String = Fixtures.entry("zone")
 
   val Rows = 100000
   val Files = 32
 
-  def ensure(spark: SparkSession): Unit = lock.synchronized {
-    if (java.nio.file.Files.exists(marker)) return
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) ingest.FsUtil.deleteTree(p)
+  def ensure(spark: SparkSession): Unit = Fixtures.published("zone") { tmp =>
     val rows = spark.range(Rows).select(
       col("id"),
       ((col("id") * 2654435761L) % 100003L).as("a"),
       ((col("id") * 7919L) % 99991L).as("b"))
     Layout.zOrderRepartition(rows, "a", "b", numFiles = Files, bits = 17)
-      .write.mode("overwrite").parquet(dir)
-    java.nio.file.Files.createFile(marker)
+      .write.mode("overwrite").parquet(tmp)
   }
 }

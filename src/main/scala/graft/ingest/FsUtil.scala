@@ -18,22 +18,26 @@ object FsUtil {
     Files.deleteIfExists(p)
   }
 
-  /** Total row count of parquet `files` read from FOOTERS ONLY — a
-    * driver-side metadata probe that costs no Spark job (a `df.count()`
-    * probe launches one full job per call; measured as a per-micro-batch
-    * job in every streaming index operator, VERDICT r16). Returns None
-    * when the list is empty, a file is not parquet, or any footer is
+  /** Row count of parquet `files` read from FOOTERS ONLY — a driver-side
+    * metadata probe that costs no Spark job (a `df.count()` probe launches
+    * one full job per call; measured as a per-micro-batch job in every
+    * streaming index operator, VERDICT r16). Reading stops once the count
+    * reaches `cap`, so a many-file input costs O(1) footers when the
+    * caller only needs to know it is big. Returns None when the list is
+    * empty, a file is not named `.parquet` (never opened), or a footer is
     * unreadable — callers fall back to their size-agnostic behavior. */
   def footerRowCount(
       files: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Option[Long] = {
-    if (files.isEmpty) return None
+      conf: org.apache.hadoop.conf.Configuration,
+      cap: Long = Long.MaxValue): Option[Long] = {
+    if (files.isEmpty || !files.forall(_.endsWith(".parquet"))) return None
     try {
       var rows = 0L
-      files.foreach { f =>
+      val it = files.iterator
+      while (it.hasNext && rows < cap) {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), conf))
+            new org.apache.hadoop.fs.Path(it.next()), conf))
         try rows += r.getRecordCount
         finally r.close()
       }

@@ -33,16 +33,6 @@ object Dedup {
       .otherwise(array(concat_ws(" ", toks)))
   }
 
-  /** Repartition a small-partition-count input so the expensive map-side
-    * signature pass uses every core: a corpus read from a few files arrives
-    * in a few partitions, and the interpreted higher-order folds would
-    * otherwise serialize on them. At cluster scale the input already has
-    * thousands of partitions and this is a cheap no-op-ish rebalance. */
-  private def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   /** Modulus for the affine hash family (2^31 - 1, prime). */
   val HashP = 2147483647L
 
@@ -128,7 +118,8 @@ object Dedup {
 
   def winnowFingerprints(docs: DataFrame, textCol: String = "text", w: Int = 4): DataFrame = {
     val kernel = udf((text: String) => winnowKernel(text, w))
-    spread(docs).select(col("doc_id"), explode(kernel(col(textCol))).as("fingerprint"))
+    TextOps.spread(docs, rowsPerTask = 1L)
+      .select(col("doc_id"), explode(kernel(col(textCol))).as("fingerprint"))
   }
 
   /** EXACT shingle Jaccard >= `minJaccard` — the ground truth LSH is
@@ -390,7 +381,7 @@ object Dedup {
     // integer aggregate / min-struct / equi-join. rowsPerTask sweep
     // (sf0.1, 32 threads, min-of-3): unspread 2.90 s / 256 2.00 / 1024
     // 1.68 on chunk_novelty; the inc face prefers 1024 too (3.68 vs 3.06)
-    TextOps.cdcChunk(TextOps.spreadScan(docs, rowsPerTask = 1024L), w, divisor, textCol, idCol)
+    TextOps.cdcChunk(TextOps.spread(docs, rowsPerTask = 1024L), w, divisor, textCol, idCol)
       .select(
         col(idCol), col("chunk_idx"), col("n_tokens"),
         md5(col("chunk_text")).as("__h"))
@@ -580,7 +571,8 @@ object Dedup {
     * md5 folds measure far slower than a compiled function (same
     * rationale as the minhash kernels; byte-identical hex output). */
   private def ngramFrame(df: DataFrame, n: Int, idCol: String, textCol: String): DataFrame =
-    spread(df).select(col(idCol), explode(ngramMd5Udf(col(textCol), lit(n))).as("__h"))
+    TextOps.spread(df, rowsPerTask = 1L)
+      .select(col(idCol), explode(ngramMd5Udf(col(textCol), lit(n))).as("__h"))
 
   /** Cross-SOURCE overlap matrix: for every source pair, how many distinct
     * n-token window hashes they share, plus the Jaccard of their window
@@ -683,7 +675,7 @@ object Dedup {
       n: Int = 8,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val win = spread(docs).select(
+    val win = TextOps.spread(docs, rowsPerTask = 1L).select(
       col(idCol),
       posexplode(ngramMd5Udf(col(textCol), lit(n))).as(Seq("__p", "__h")))
     val crossDoc = win
@@ -718,7 +710,7 @@ object Dedup {
     * a pipeline persists this frame as a signature table and reuses it. */
   def minhashFrame(docs: DataFrame, textCol: String = "text", k: Int = 16)
       : DataFrame =
-    spread(docs)
+    TextOps.spread(docs, rowsPerTask = 1L)
       .select(col("doc_id"), minhashUdf(k)(col(textCol)).as("sig"))
 
   /** Band-signature index rows (doc_id, sig, band_idx, band_hash) — the
@@ -836,7 +828,7 @@ object Dedup {
     // tokenize/md5 work is shared, and the frame is materialized once (the
     // "signature table" pattern) so neither self-join side recomputes it.
     val shingleSetUdf = udf((text: String) => shingleStrings(text).distinct)
-    val base = spread(docs)
+    val base = TextOps.spread(docs, rowsPerTask = 1L)
       .select(
         col("doc_id"),
         minhashUdf(k)(col(textCol)).as("sig"),
@@ -997,7 +989,7 @@ object Dedup {
   /** Per-document 64-bit simhash frame (map-side pass), via the native
     * codegen expression graft.functions.SimHash64. */
   def simhashFrame(docs: DataFrame, textCol: String = "text"): DataFrame =
-    spread(docs)
+    TextOps.spread(docs, rowsPerTask = 1L)
       .select(col("doc_id"), graft.functions.SimHash64(col(textCol)).as("simhash"))
 
   /** Near-duplicate pairs with hamming(simhash) <= maxDist, candidates from

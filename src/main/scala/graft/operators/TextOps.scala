@@ -33,31 +33,34 @@ object TextOps {
     size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
 
   /** Spread a narrow-partitioned input before a heavy per-row kernel
-    * (tokenize + explode + model scoring): the bench/test corpora arrive
-    * as single-row-group parquet files, so the whole kernel stage would
-    * otherwise run as ONE task regardless of core count (measured: the
-    * single-task tokenize stage dominated the dsir/NB rows). The
-    * round-robin exchange ships the raw text once — bytes ≪ the kernel's
-    * CPU — and inputs that already carry parallelism pass through
-    * unshuffled, so a many-file 100 TB scan is untouched. Results are
-    * unchanged: every consumer below is either an exact integer/count
-    * aggregate or rounds before comparing/ranking (the cross-engine
-    * tolerance the oracles already rely on).
+    * (tokenize / chunk / decode / signature folds): single-file inputs
+    * and file-backfill micro-batches arrive as ONE partition, so the
+    * kernel stage would otherwise run as one task regardless of core
+    * count (measured: it dominated the dsir/NB rows and the stream drains
+    * 3x). The round-robin exchange ships the raw rows once — bytes ≪ the
+    * kernel's CPU — and inputs that already carry parallelism pass
+    * through unshuffled, so a many-file 100 TB scan is untouched. Every
+    * consumer is an exact aggregate or rounds before comparing/ranking,
+    * so results are unchanged.
     *
-    * The target is DERIVED FROM ROW COUNT — clamp(rows/rowsPerTask, 1,
+    * The target is DERIVED FROM ROW COUNT — clamp(⌈rows/rowsPerTask⌉, 1,
     * defaultParallelism) — not pinned to the core count: a fixed
-    * all-cores spread made the small-input rows PAY parallelism they
-    * cannot use (driver r16: q_text_dsir_select 3.38 s at 32 cores vs
-    * 1.89 s at 8 — per-task fixed cost × 32 outweighed the kernel). The
-    * row probe reads parquet footers only (no Spark job); non-file
-    * inputs fall back to the full-parallelism target. */
-  private[operators] def spreadScan(df: DataFrame, rowsPerTask: Long = 64L): DataFrame = {
+    * all-cores spread made small inputs PAY parallelism they cannot use
+    * (driver r16: q_text_dsir_select 3.38 s at 32 cores vs 1.89 s at 8).
+    * Call sites keep their measured `rowsPerTask` (1024 for the text
+    * scans, 64 for stream micro-batches, 1 for the dedup signature
+    * passes — i.e. every core for any input with at least that many
+    * rows). Rows come from parquet FOOTERS (no Spark job), read only up
+    * to the clamp; inputs that are not parquet files get the full
+    * spread. */
+  private[graft] def spread(df: DataFrame, rowsPerTask: Long): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val target = graft.ingest.FsUtil.footerRowCount(
-        df.inputFiles.toSeq, df.sparkSession.sparkContext.hadoopConfiguration)
+    val target = graft.ingest.FsUtil
+      .footerRowCount(df.inputFiles.toSeq, df.sparkSession.sparkContext.hadoopConfiguration,
+        cap = p.toLong * rowsPerTask)
       .map(rows => math.max(1L, math.min(p.toLong, (rows + rowsPerTask - 1) / rowsPerTask)).toInt)
       .getOrElse(p)
-    if (df.rdd.getNumPartitions * 2 < target) df.repartition(target) else df
+    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
   /** Evaluate `expr` once per row and hand it to `body` as a bound lambda
@@ -1304,8 +1307,8 @@ object TextOps {
     // 2.14 s, 512 → 1.31, 1024 → 1.14, 2048 → 1.80 — the dsir kernel's
     // per-task fixed cost wants ~1k rows/task; the defaultParallelism cap
     // keeps genuinely large corpora at full width
-    val docsS = spreadScan(docs, rowsPerTask = 1024L)
-    val targetS = spreadScan(target, rowsPerTask = 1024L)
+    val docsS = spread(docs, rowsPerTask = 1024L)
+    val targetS = spread(target, rowsPerTask = 1024L)
     def features(df: DataFrame, cols: Column*): DataFrame =
       df.select(cols :+ explode(ngramStrings(col(textCol), n)).as("g"): _*)
         .withColumn("b", pmod(graft.functions.Funcs.md5Hash60(col("g")), lit(buckets.toLong)))

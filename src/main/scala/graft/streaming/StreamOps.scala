@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.TextOps
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -46,34 +47,6 @@ object StreamOps {
     }
 
   private val drainLock = new Object
-
-  /** Spread a micro-batch before its heavy per-row kernel (tokenize /
-    * chunk / decode), with the partition count DERIVED FROM BATCH SIZE
-    * instead of pinned to the cluster's parallelism: a file-backfill
-    * batch (maxFilesPerTrigger=1) arrives as ONE partition — the kernel
-    * must not run single-task (measured: it dominated the drain 3x) —
-    * but a few-hundred-row batch spread to every core pays ~100 ms of
-    * per-task fixed cost per stage for sub-ms of work (measured at
-    * harness scale). rows/`rowsPerTask` partitions, capped at
-    * defaultParallelism (big batches keep full parallelism — the prior
-    * behavior), floored at 1. The row probe reads the parquet FOOTERS of
-    * the batch's input files on the driver — r16's `batch.count()` probe
-    * launched one extra full Spark job per micro-batch per operator
-    * (driver evidence: q_stream_lr ×0.72, family +7.3 s; ADVICE r16),
-    * where the footer read costs ~a ms of driver metadata I/O and no job.
-    * Non-file-backed batches (rate/kafka-style sources, where no footer
-    * exists) fall back to the full-parallelism spread — the pre-r16
-    * behavior. A batch already carrying >= target partitions passes
-    * through unshuffled. */
-  private def spreadBatch(batch: DataFrame, rowsPerTask: Long = 64L): DataFrame = {
-    val maxParts = batch.sparkSession.sparkContext.defaultParallelism
-    val target = graft.ingest.FsUtil.footerRowCount(
-        batch.inputFiles.toSeq, batch.sparkSession.sparkContext.hadoopConfiguration)
-      .map(rows => math.max(1L, math.min(maxParts.toLong,
-        (rows + rowsPerTask - 1) / rowsPerTask)).toInt)
-      .getOrElse(maxParts)
-    if (batch.rdd.getNumPartitions < target) batch.repartition(target) else batch
-  }
 
   /** Narrow a batch-sized frame to ~1/4 of its compute parallelism before
     * an append, so each micro-batch lands a few well-sized files instead
@@ -225,7 +198,7 @@ object StreamOps {
       // single-file micro-batches arrive as ONE partition; tokenization is
       // the real work — spread before paying it (the indexLexical rationale)
       val raw = batch.toDF()
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       val b = spread.persist()
       try {
         val scored = graft.operators.TextOps.lrScore(b, weights, idCol, textCol, dim)
@@ -294,7 +267,7 @@ object StreamOps {
     validateGateDim(weights, dim)
     stream.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
       val raw = batch.toDF()
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       val b = spread.persist()
       try {
         val scored = graft.operators.TextOps.lrScore(b, weights, idCol, textCol, dim)
@@ -320,7 +293,7 @@ object StreamOps {
       // the single-task index build dominated the drain 3x). A batch that
       // already carries parallelism passes through unshuffled.
       val raw = batch.toDF()
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       // persist (not localCheckpoint): the pins live exactly one batch —
       // a long-running stream must not accumulate session-lifetime blocks
       val b = spread.persist()
@@ -390,7 +363,7 @@ object StreamOps {
             "(pre-unified (doc,term,pos) schema) — appending would mix schemas " +
             "and silently drop dl; rebuild the store with positionalIndex")
       }
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       val b = spread.persist()
       val positional = graft.operators.TextOps.positionalIndex(b, idCol, textCol).persist()
       try {
@@ -449,7 +422,7 @@ object StreamOps {
       // real work — spread before paying it (the indexLexical rationale)
       val raw = batch.toDF()
       val spark = raw.sparkSession
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       val b = spread.persist()
       val chunks = graft.operators.Dedup.chunkHashes(b, w, divisor, idCol, textCol).persist()
       try {
@@ -499,7 +472,7 @@ object StreamOps {
       textCol: String = "text"): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
       val raw = batch.toDF()
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       val b = spread.persist()
       try {
         graft.operators.TextOps.vocabState(b, idCol, textCol)
@@ -541,7 +514,7 @@ object StreamOps {
     stream.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
       val raw = batch.toDF()
       val spark = raw.sparkSession
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       val hashes = graft.operators.Multimodal.imageHashes(spread, idCol, binCol).persist()
       try {
         val storePath = s"$dir/hashes"
@@ -592,7 +565,7 @@ object StreamOps {
       embCol: String = "embedding"): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
       val raw = batch.toDF()
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       graft.operators.Similarity.driftCellCounts(spread, centroids, idCol, embCol)
         .coalesce(1) // ≤ k rows of state — one file per batch
         .write.mode("append").parquet(s"$dir/cell_counts")
@@ -620,7 +593,7 @@ object StreamOps {
       idCol: String = "doc_id"): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
       val raw = batch.toDF()
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       val b = spread.persist()
       try {
         val (scal, fps, langs, srcs) =
@@ -659,7 +632,7 @@ object StreamOps {
       k: Int = 256): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
       val raw = batch.toDF()
-      val spread = spreadBatch(raw)
+      val spread = TextOps.spread(raw, rowsPerTask = 64L)
       graft.operators.Profile.sketchState(spread, valueCol, sourceCol, k)
         .coalesce(1) // sources-sized state — one file per batch
         .write.mode("append").parquet(s"$dir/sketch_parts")

@@ -185,38 +185,42 @@ class GoldenMiscSpec extends SparkSpec {
 
   test("cli: load a JSON file of SCOs then query it (cli.py:258-273)") {
     val wd = tmpDir()
-    val f = java.nio.file.Files.createTempFile("graft_load", ".json")
-    java.nio.file.Files.writeString(f,
-      """[{"type":"url","value":"http://a.example.com/1"},
-        | {"type":"url","value":"http://b.example.com/2"}]""".stripMargin)
-    Cli.run(spark, Seq(wd, "load", "my_urls", f.toString, "--sco-type=url"))
-    val s = new Storage(spark, wd)
-    assert(s.count("my_urls") == 2)
-    assert(s.values("value", "my_urls").map(_.toString).sorted ==
-      Seq("http://a.example.com/1", "http://b.example.com/2"))
+    withTempDir("graft_load") { d =>
+      val f = java.nio.file.Paths.get(d, "load.json")
+      java.nio.file.Files.writeString(f,
+        """[{"type":"url","value":"http://a.example.com/1"},
+          | {"type":"url","value":"http://b.example.com/2"}]""".stripMargin)
+      Cli.run(spark, Seq(wd, "load", "my_urls", f.toString, "--sco-type=url"))
+      val s = new Storage(spark, wd)
+      assert(s.count("my_urls") == 2)
+      assert(s.values("value", "my_urls").map(_.toString).sorted ==
+        Seq("http://a.example.com/1", "http://b.example.com/2"))
+    }
   }
 
   test("cli: CSV load is RFC-4180 (quoted commas, doubled quotes, embedded newlines)") {
     val wd = tmpDir()
-    val f = java.nio.file.Files.createTempFile("graft_load", ".csv")
-    // value 1: comma inside quotes; value 2: doubled quote; value 3:
-    // embedded newline inside quotes; row 4 is short (padded with null)
-    java.nio.file.Files.writeString(f,
-      "value,x_note\n" +
-        "\"http://a.example.com/1,2\",plain\n" +
-        "http://b.example.com/2,\"say \"\"hi\"\"\"\n" +
-        "http://c.example.com/3,\"line1\nline2\"\n" +
-        "http://d.example.com/4\n")
-    Cli.run(spark, Seq(wd, "load", "csv_urls", f.toString, "--sco-type=url"))
-    val s = new Storage(spark, wd)
-    assert(s.count("csv_urls") == 4)
-    val rows = s.lookup("csv_urls", Seq("value", "x_note"))
-      .map(m => m("value").toString -> m.get("x_note").flatMap(Option(_)).map(_.toString).orNull)
-      .toMap
-    assert(rows("http://a.example.com/1,2") == "plain")
-    assert(rows("http://b.example.com/2") == "say \"hi\"")
-    assert(rows("http://c.example.com/3") == "line1\nline2")
-    assert(rows("http://d.example.com/4") == null) // short row -> restval null
+    withTempDir("graft_load") { d =>
+      val f = java.nio.file.Paths.get(d, "load.csv")
+      // value 1: comma inside quotes; value 2: doubled quote; value 3:
+      // embedded newline inside quotes; row 4 is short (padded with null)
+      java.nio.file.Files.writeString(f,
+        "value,x_note\n" +
+          "\"http://a.example.com/1,2\",plain\n" +
+          "http://b.example.com/2,\"say \"\"hi\"\"\"\n" +
+          "http://c.example.com/3,\"line1\nline2\"\n" +
+          "http://d.example.com/4\n")
+      Cli.run(spark, Seq(wd, "load", "csv_urls", f.toString, "--sco-type=url"))
+      val s = new Storage(spark, wd)
+      assert(s.count("csv_urls") == 4)
+      val rows = s.lookup("csv_urls", Seq("value", "x_note"))
+        .map(m => m("value").toString -> m.get("x_note").flatMap(Option(_)).map(_.toString).orNull)
+        .toMap
+      assert(rows("http://a.example.com/1,2") == "plain")
+      assert(rows("http://b.example.com/2") == "say \"hi\"")
+      assert(rows("http://c.example.com/3") == "line1\nline2")
+      assert(rows("http://d.example.com/4") == null) // short row -> restval null
+    }
   }
 
   test("cli: splint transforms print a bundle on stdout (splint.py:50-221)") {

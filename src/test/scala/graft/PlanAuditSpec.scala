@@ -177,21 +177,22 @@ class PlanAuditSpec extends SparkSpec {
 
   test("bm25SearchPositional: term filter pushes below the tf aggregate to the postings scan") {
     val T = graft.operators.TextOps
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pos_audit").toString
-    T.positionalIndex(spark.read.parquet(s"$sfDir/documents.parquet"))
-      .write.parquet(s"$tmp/postings")
-    val store = spark.read.parquet(s"$tmp/postings")
-    val bp = T.bm25FromPositional(store)
-    val plan = physical(T.bm25SearchPositional(
-      store, T.bm25Df(bp), T.bm25CorpusFromPostings(
-        spark.read.parquet(s"$sfDir/documents.parquet"), bp),
-      Seq("join", "vector")))
-    // the unified-store search must stay query-term-sized: Catalyst pushes
-    // the grouping-key isin through the derived tf aggregate to the scan
-    assert(plan.contains("PushedFilters: [In(term"),
-      s"term filter must reach the postings scan:\n$plan")
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"global top-k must be a distributed TakeOrdered:\n$plan")
+    withTempDir("graft_pos_audit") { tmp =>
+      T.positionalIndex(spark.read.parquet(s"$sfDir/documents.parquet"))
+        .write.parquet(s"$tmp/postings")
+      val store = spark.read.parquet(s"$tmp/postings")
+      val bp = T.bm25FromPositional(store)
+      val plan = physical(T.bm25SearchPositional(
+        store, T.bm25Df(bp), T.bm25CorpusFromPostings(
+          spark.read.parquet(s"$sfDir/documents.parquet"), bp),
+        Seq("join", "vector")))
+      // the unified-store search must stay query-term-sized: Catalyst pushes
+      // the grouping-key isin through the derived tf aggregate to the scan
+      assert(plan.contains("PushedFilters: [In(term"),
+        s"term filter must reach the postings scan:\n$plan")
+      assert(plan.contains("TakeOrderedAndProject"),
+        s"global top-k must be a distributed TakeOrdered:\n$plan")
+    }
   }
 
   test("phraseHitsIndexed never re-tokenizes: term filters on postings, (doc, start) equi-joins") {

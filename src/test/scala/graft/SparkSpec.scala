@@ -9,6 +9,13 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Run `body` on a fresh temp dir named `prefix*`, deleted with
+    * everything in it however `body` exits. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString) finally graft.ingest.FsUtil.deleteTree(dir)
+  }
 }
 
 object SparkSpec {
