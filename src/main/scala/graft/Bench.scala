@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed JIT/classloader warmup, one per kernel family: relational
-    // plan machinery, the compiled minhash/md5 signature kernels, and the
-    // native vector codegen expressions — so the first timed query of each
-    // family measures the operator, not HotSpot compilation
-    Seq("q_projection", "q_dedup_minhash", "q_ann_lsh").foreach { q =>
-      try SparkEntry.queries(q)(spark, sfDir).count()
-      catch {
-        case t: Throwable =>
-          System.err.println(s"[bench] warmup $q failed: ${t.getClass.getSimpleName}: " +
-            String.valueOf(t.getMessage).take(200))
-      }
-    }
+    val cpus = Harness.cpus("4")
+    val spark = Harness.session(cpus)
+    Harness.warmup(spark, sfDir, "bench")
     // one-time fixture corpora (deterministic synthetic STIX workdirs) are
     // built untimed: the benchmark measures the operators, not test setup
     // a corpus-build failure surfaces as every dependent query timing -1.0;

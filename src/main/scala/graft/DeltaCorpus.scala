@@ -1,6 +1,7 @@
 package graft
 
 import graft.ingest.UpsertWriter
+import graft.ingest.UpsertWriter.AppendKey
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -28,10 +29,10 @@ object DeltaCorpus {
     // base load, then DeltaFilesMax pure-insert batches: each batch's new
     // ids hash across all buckets, so every bucket gains ONE delta file
     // per batch and none crosses the compaction threshold
-    UpsertWriter.insertIgnore(spark, tmp, table, batch("base", BaseRows, 0))
+    UpsertWriter.appendKeyed(spark, tmp, table, batch("base", BaseRows, 0), AppendKey.Id)
     (0 until UpsertWriter.DeltaFilesMax).foreach { b =>
-      UpsertWriter.insertIgnore(
-        spark, tmp, table, batch(s"delta$b", RowsPerBatch, 0))
+      UpsertWriter.appendKeyed(
+        spark, tmp, table, batch(s"delta$b", RowsPerBatch, 0), AppendKey.Id)
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Measurement harness for the optimization rounds (guide §1: measure
@@ -18,15 +17,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object Perf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus("32")
     val reps = sys.env.get("SPARK_GRAFT_PERF_REPS").flatMap(_.toIntOption).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
 
     val jobs = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -42,10 +35,7 @@ object Perf {
     })
 
     // same untimed setup as Bench
-    Seq("q_projection", "q_dedup_minhash", "q_ann_lsh").foreach { q =>
-      try SparkEntry.queries(q)(spark, sfDir).count()
-      catch { case t: Throwable => System.err.println(s"[perf] warmup $q failed: $t") }
-    }
+    Harness.warmup(spark, sfDir, "perf")
     Fixtures.ensureAll(spark, "perf")
 
     val names: Seq[String] =

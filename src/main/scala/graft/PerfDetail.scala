@@ -1,21 +1,14 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-job drill-down for one query: job id, duration, stage task counts,
   * callsite — to attribute fixed costs. Measurement only; not contract. */
 object PerfDetail {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus("32")
+    val spark = Harness.session(cpus)
 
     case class JobRec(id: Int, var t0: Long = 0L, var t1: Long = 0L,
         var stages: Seq[(Int, String)] = Nil, var site: String = "",
@@ -41,9 +34,7 @@ object PerfDetail {
       }
     })
 
-    Seq("q_projection", "q_dedup_minhash", "q_ann_lsh").foreach { q =>
-      try SparkEntry.queries(q)(spark, sfDir).count() catch { case _: Throwable => () }
-    }
+    Harness.warmup(spark, sfDir, "detail")
     Fixtures.ensureAll(spark, "perfdetail")
 
     args.foreach { name =>

@@ -4644,9 +4644,8 @@ object PipelineQueries {
          |FROM read_parquet('${DeltaCorpus.dir}/${DeltaCorpus.table}.parquet/**/*.parquet',
          |                  hive_partitioning=0, filename=1)
          |GROUP BY 1 ORDER BY 1""".stripMargin) { c =>
-      import graft.operators.Layout
       DeltaCorpus.ensure(c.spark)
-      Layout.compactionReport(c.spark, DeltaCorpus.dir, DeltaCorpus.table)
+      graft.ingest.UpsertWriter.compactionReport(c.spark, DeltaCorpus.dir, DeltaCorpus.table)
         .select(col("bucket").cast("long").as("bucket"), col("n_base_files"),
           col("n_delta_files"), col("base_rows"), col("delta_rows"),
           col("needs_compaction"))

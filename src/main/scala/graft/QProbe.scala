@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Bench-methodology timer for a SUBSET of queries: same session shape,
   * same untimed warmup/corpora, same interleaved min-of-N (the full Bench
@@ -12,19 +11,10 @@ import org.apache.spark.sql.SparkSession
 object QProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus("32")
     val reps = sys.env.get("SPARK_GRAFT_PERF_REPS").flatMap(_.toIntOption).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Seq("q_projection", "q_dedup_minhash", "q_ann_lsh").foreach { q =>
-      try SparkEntry.queries(q)(spark, sfDir).count()
-      catch { case t: Throwable => System.err.println(s"[qprobe] warmup $q failed: $t") }
-    }
+    val spark = Harness.session(cpus)
+    Harness.warmup(spark, sfDir, "qprobe")
     Fixtures.ensureAll(spark, "qprobe")
     val names = args.toSeq.filter { n =>
       val ok = SparkEntry.queries.contains(n)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Measurement harness for the streaming rows (guide §1 / VERDICT r16 #6:
@@ -18,14 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus("32")
+    val spark = Harness.session(cpus)
     val t0 = System.nanoTime()
     def ts: String = f"${(System.nanoTime() - t0) / 1e9}%9.3f"
     spark.streams.addListener(new StreamingQueryListener {

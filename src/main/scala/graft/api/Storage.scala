@@ -2,6 +2,7 @@ package graft.api
 
 import graft.catalog.Catalog
 import graft.ingest.{Flatten, Translate, UpsertWriter}
+import graft.ingest.UpsertWriter.AppendKey
 import graft.model.{StixId, StixMeta}
 import graft.model.StixMeta.{NodeLink, RelLink}
 import graft.pattern.Pattern
@@ -265,29 +266,16 @@ class Storage(val spark: SparkSession, val workDir: String) {
     val flat = bundles
       .flatMap { b =>
         val objs = Flatten.flattenBundle(b)
+        val main = objs.map { o =>
+          val rest = o - "type" - "spec_version"
+          (o("type").toString,
+            StixId.canonicalJson(rest.map { case (k, v) => StixMeta.shortenKey(k) -> v }))
+        }
         // per-bundle collapse of column metadata (objects of a bundle share
         // schema, ~|objects|-fold fewer __columns rows) with the SAME pick
-        // rule as every other dedup (StixMeta.dtypePreferred): a
-        // first-sighting set here could freeze a fallback 'str' before the
-        // downstream window ever sees the real dtype
-        val best = scala.collection.mutable.Map.empty[(String, String), String]
-        val main = objs.map { o =>
-          val t = o("type").toString
-          val rest = o - "type" - "spec_version"
-          if (!t.startsWith("__")) rest.foreach { case (k, v) =>
-            if (v != null) {
-              val d = StixMeta.pyDtype(v)
-              if (StixMeta.dtypePreferred(d, best.get((t, k)))) best((t, k)) = d
-            }
-          }
-          (t, StixId.canonicalJson(rest.map { case (k, v) => StixMeta.shortenKey(k) -> v }))
-        }
-        val meta = best.toSeq.sortBy(_._1).map { case ((t, k), d) =>
-          ("__columns", StixId.canonicalJson(Map(
-            "otype" -> t, "path" -> k,
-            "shortname" -> StixMeta.shortenKey(k), "dtype" -> d)))
-        }
-        main ++ meta
+        // rule as every other dedup: a first-sighting set here could freeze
+        // a fallback 'str' before the downstream window sees the real dtype
+        main ++ StixMeta.columnRows(objs).map(m => ("__columns", StixId.canonicalJson(m)))
       }
       .toDF("otype", "obj")
       .localCheckpoint() // parse bundles once, not once per discovered type
@@ -302,39 +290,48 @@ class Storage(val spark: SparkSession, val workDir: String) {
     val types = flat.select("otype").distinct().collect().map(_.getString(0))
     types.foreach { t =>
       val df = spark.read.json(flat.where(col("otype") === t).select("obj").as[String])
-      t match {
-        // executor-side dtype is computed per VALUE, so one column can emit
-        // conflicting rows (a transformer-failure fallback yields 'str'
-        // beside the good rows' 'int'): keep ONE row per (otype, path) —
-        // non-'str' preferred, then lexicographic — the same pick rule the
-        // driver path (writeObjects) applies, and never add a second row
-        // for an already-recorded path
-        case "__columns" =>
+      writeTable(t,
+        if (t != "__columns") df
+        else {
+          // executor-side dtype is computed per VALUE, so one column can
+          // emit conflicting rows (a transformer-failure fallback yields
+          // 'str' beside the good rows' 'int'): keep ONE row per (otype,
+          // path) — non-'str' preferred, then lexicographic — the same pick
+          // rule the driver path applies (StixMeta.dtypePreferred)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy("otype", "path")
             .orderBy(
               when(col("dtype") === lit("str"), 1).otherwise(0),
               col("dtype"), col("shortname"))
-          val once = df
-            .withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
+          df.withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
             .where(col("__rn") === 1).drop("__rn")
-          UpsertWriter.appendKeyedFirst(spark, workDir, t, once, Seq("otype", "path"))
-        case "__contains" | "__reflist" =>
-          UpsertWriter.appendDistinct(spark, workDir, t, df)
-        case "observed-data" => UpsertWriter.insertIgnore(spark, workDir, t, df)
-        case _               => UpsertWriter.upsert(spark, workDir, t, df)
-      }
-      catalog.invalidateBase(t)
-      dropFinish(t)
+        })
     }
-    val prov = flat
+    writeTable("__queries", flat
       .where(!col("otype").isin("__contains", "__reflist", "__columns"))
       .select(get_json_object(col("obj"), "$.id").as("sco_id"))
       .where(col("sco_id").isNotNull)
       .distinct()
-      .withColumn("query_id", lit(queryId))
-    UpsertWriter.appendDistinct(spark, workDir, "__queries", prov)
-    catalog.invalidateBase("__queries")
+      .withColumn("query_id", lit(queryId)))
+  }
+
+  /** Write one batch into table `t` by the table's rule, then drop what
+    * was cached over the table — the ONE place a table's write verb is
+    * chosen. SCO tables merge-upsert by id (sqlstorage.py:367-408); the
+    * rest keep the first sighting of a key (INSERT ... ON CONFLICT DO
+    * NOTHING, sqlstorage.py:389-392): observed-data by id, `__columns` by
+    * (otype, path), the edge and provenance tables by the whole row. */
+  private def writeTable(t: String, df: DataFrame): Unit = {
+    t match {
+      case "observed-data" => UpsertWriter.appendKeyed(spark, workDir, t, df, AppendKey.Id)
+      case "__columns" =>
+        UpsertWriter.appendKeyed(spark, workDir, t, df, AppendKey.Cols(Seq("otype", "path")))
+      case "__contains" | "__reflist" | "__queries" =>
+        UpsertWriter.appendKeyed(spark, workDir, t, df, AppendKey.Row)
+      case _ => UpsertWriter.upsert(spark, workDir, t, df)
+    }
+    catalog.invalidateBase(t)
+    dropFinish(t)
   }
 
   // ----- finish: post-ingest layout (sqlstorage.py:824-827) ---------------
@@ -484,18 +481,9 @@ class Storage(val spark: SparkSession, val workDir: String) {
           val t = o("type").toString
           val objRow = (t, StixId.canonicalJson(
             (o - "type").map { case (k, v) => StixMeta.shortenKey(k) -> v }))
-          // __columns metadata rows, as the driver-side path records
-          // (ingest.py:640-656); appendDistinct dedups the fan-out
-          val colRows =
-            if (t.startsWith("__")) Nil
-            else o.iterator.collect {
-              case (k, v) if k != "type" && k != "spec_version" && v != null =>
-                ("__columns", StixId.canonicalJson(Map(
-                  "otype" -> t, "path" -> k,
-                  "shortname" -> StixMeta.shortenKey(k),
-                  "dtype" -> StixMeta.pyDtype(v))))
-            }.toSeq
-          objRow +: colRows
+          // __columns metadata rows, as the driver-side path records; the
+          // (otype, path) window in writeTypedJsonRows dedups the fan-out
+          objRow +: StixMeta.columnRows(Seq(o)).map(m => ("__columns", StixId.canonicalJson(m)))
         }
       }
       .toDF("otype", "obj")
@@ -506,65 +494,28 @@ class Storage(val spark: SparkSession, val workDir: String) {
   }
 
   private def writeObjects(objs: Seq[Map[String, Any]], queryId: String): Unit = {
-    val byType = objs.groupBy(_("type").toString)
     val colMeta = Seq.newBuilder[Map[String, Any]]
-    byType.foreach { case (t, rows) =>
-      // shorten long/extension column names at ingest (splitter.py:240-256)
-      // and record ONE (otype, path, shortname, dtype) row per path for
-      // __columns — non-'str' dtype preferred, then lexicographic, the SAME
-      // pick rule as the distributed path's window dedup below, so the two
-      // ingest paths record identical metadata for identical data
-      if (!t.startsWith("__")) {
-        val best = scala.collection.mutable.Map.empty[String, String]
-        rows.foreach(_.foreach { case (k, v) =>
-          if (k != "type" && k != "spec_version" && v != null) {
-            val d = StixMeta.pyDtype(v)
-            if (StixMeta.dtypePreferred(d, best.get(k))) best(k) = d
-          }
-        })
-        best.toSeq.sortBy(_._1).foreach { case (k, d) =>
-          colMeta += Map(
-            "otype" -> t, "path" -> k,
-            "shortname" -> StixMeta.shortenKey(k),
-            "dtype" -> d)
-        }
-      }
-      val df = UpsertWriter.rowsToDF(
-        spark,
-        // type and spec_version never become columns (splitter.py:240-241)
-        rows.map(r => (r - "type" - "spec_version").map { case (k, v) => StixMeta.shortenKey(k) -> v }))
-      t match {
-        case "__contains" | "__reflist" =>
-          UpsertWriter.appendDistinct(spark, workDir, t, df)
-        case "observed-data" =>
-          UpsertWriter.insertIgnore(spark, workDir, t, df)
-        case _ =>
-          UpsertWriter.upsert(spark, workDir, t, df)
-      }
-      catalog.invalidateBase(t)
-      dropFinish(t)
+    objs.groupBy(_("type").toString).foreach { case (t, rows) =>
+      // ONE __columns row per path, by the pick rule the distributed
+      // path's window dedup shares, so both ingest paths record identical
+      // metadata for identical data
+      colMeta ++= StixMeta.columnRows(rows)
+      // shorten long/extension column names at ingest (splitter.py:240-256);
+      // type and spec_version never become columns (splitter.py:240-241)
+      writeTable(t, UpsertWriter.rowsToDF(spark,
+        rows.map(r => (r - "type" - "spec_version").map { case (k, v) => StixMeta.shortenKey(k) -> v })))
     }
     val meta = colMeta.result()
-    if (meta.nonEmpty) {
-      // keyed-first like the distributed path: a later batch re-sighting a
-      // path with a different value class must not add a second row
-      UpsertWriter.appendKeyedFirst(
-        spark, workDir, "__columns", UpsertWriter.rowsToDF(spark, meta), Seq("otype", "path"))
-      catalog.invalidateBase("__columns")
-    }
+    if (meta.nonEmpty) writeTable("__columns", UpsertWriter.rowsToDF(spark, meta))
     // provenance: every flattened SCO id came from this cache call
     val scoIds = objs
       .filter(o => !Seq("__contains", "__reflist").contains(o("type").toString))
       .flatMap(_.get("id"))
       .map(_.toString)
       .distinct
-    if (scoIds.nonEmpty) {
-      val prov = UpsertWriter.rowsToDF(
-        spark,
-        scoIds.map(i => Map[String, Any]("sco_id" -> i, "query_id" -> queryId)))
-      UpsertWriter.appendDistinct(spark, workDir, "__queries", prov)
-      catalog.invalidateBase("__queries")
-    }
+    if (scoIds.nonEmpty)
+      writeTable("__queries", UpsertWriter.rowsToDF(
+        spark, scoIds.map(i => Map[String, Any]("sco_id" -> i, "query_id" -> queryId))))
   }
 
   // ----- pattern verbs (sqlstorage.py:568-600) ----------------------------

@@ -80,14 +80,36 @@ object StixMeta {
     *
     * Batch-boundary caveat (intentional): the rule applies WITHIN one
     * ingest batch; across batches the first STORED sighting wins
-    * (appendKeyedFirst), matching the reference's record-once contract —
-    * its new-column hook writes the dtype exactly once and never revisits
-    * it (sqlstorage.py:187-189). A batch-1 fallback 'str' therefore stays
-    * recorded even if batch 2 sees the real dtype, exactly as upstream. */
+    * (UpsertWriter.appendKeyed), matching the reference's record-once
+    * contract — its new-column hook writes the dtype exactly once and never
+    * revisits it (sqlstorage.py:187-189). A batch-1 fallback 'str'
+    * therefore stays recorded even if batch 2 sees the real dtype, exactly
+    * as upstream. */
   def dtypePreferred(cand: String, incumbent: Option[String]): Boolean = incumbent match {
     case None => true
     case Some(c) =>
       (c == "str" && cand != "str") || ((c == "str") == (cand == "str")) && cand < c
+  }
+
+  /** The `__columns` rows recorded for `objs` (ingest.py:640-656): one
+    * (otype, path, shortname, dtype) row per (type, path) seen with a
+    * non-null value, dtype picked by [[dtypePreferred]], sorted by (type,
+    * path). Edge rows (`__` types) and the type/spec_version keys, which
+    * never become columns, record nothing. */
+  def columnRows(objs: Iterable[Map[String, Any]]): Seq[Map[String, Any]] = {
+    val best = scala.collection.mutable.Map.empty[(String, String), String]
+    objs.foreach { o =>
+      val t = o("type").toString
+      if (!t.startsWith("__")) o.foreach { case (k, v) =>
+        if (k != "type" && k != "spec_version" && v != null) {
+          val d = pyDtype(v)
+          if (dtypePreferred(d, best.get((t, k)))) best((t, k)) = d
+        }
+      }
+    }
+    best.toSeq.sortBy(_._1).map { case ((t, k), d) =>
+      Map[String, Any]("otype" -> t, "path" -> k, "shortname" -> shortenKey(k), "dtype" -> d)
+    }
   }
 
   /** Last dotted/colon piece of a path (props.py:355-360). */

@@ -121,18 +121,6 @@ object Layout {
       .sortWithinPartitions("__z")
       .drop("__z")
 
-  /** Delta-store maintenance pricing — delegates to [[graft.ingest
-    * .UpsertWriter.compactionReport]], which owns the store's layout
-    * definitions and rolls forward interrupted publishes before reading
-    * (this used to live here reading the glob directly, which could
-    * report from a torn table after a crash mid-publish). */
-  def compactionReport(
-      spark: SparkSession,
-      dir: String,
-      table: String,
-      deltaFilesMax: Int = graft.ingest.UpsertWriter.DeltaFilesMax): DataFrame =
-    graft.ingest.UpsertWriter.compactionReport(spark, dir, table, deltaFilesMax)
-
   /** Per-FILE zone map: min/max of `cols` for every parquet file under
     * `dir` — the data-skipping index that makes a clustered layout
     * ([[zOrderRepartition]], range partitioning) queryable without

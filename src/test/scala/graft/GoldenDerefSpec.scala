@@ -2,7 +2,6 @@ package graft
 
 import graft.api.Storage
 import graft.query.{GQuery, Table => QTable, Order => QOrder}
-import java.nio.file.Files
 
 /** Behavioral replay of the reference's deref suite (tests/test_deref.py).
   * The reference asserts on rendered SQL projection strings; the DataFrame
@@ -15,7 +14,7 @@ class GoldenDerefSpec extends SparkSpec {
     new java.io.File(s"src/test/resources/fixtures/$name").getAbsolutePath
 
   private def tmpStore() =
-    new Storage(spark, Files.createTempDirectory("graft-deref").toString)
+    new Storage(spark, suiteTempDir("graft-deref"))
 
   test("deref: src/dst refs replaced by value+id dotted cols (test_deref.py:10-20)") {
     val s = tmpStore()

@@ -2,7 +2,6 @@ package graft
 
 import graft.api._
 import graft.query._
-import java.nio.file.Files
 
 /** Golden replay of the reference's error-contract suite
   * (tests/test_errors.py), the validator tables (tests/test_validate.py),
@@ -16,7 +15,7 @@ class GoldenErrorsSpec extends SparkSpec {
     new java.io.File(s"src/test/resources/fixtures/$name").getAbsolutePath
 
   private def tmpStore(): Storage =
-    new Storage(spark, Files.createTempDirectory("graft-errors").toString)
+    new Storage(spark, suiteTempDir("graft-errors"))
 
   private def storeWithUrls(): Storage = {
     val s = tmpStore()

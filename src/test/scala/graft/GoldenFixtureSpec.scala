@@ -1,7 +1,6 @@
 package graft
 
 import graft.api.Storage
-import java.nio.file.Files
 
 /** Golden-value e2e tests replayed from the reference's own suite on its
   * own fixture bundles (public test data; FIXTURES.md §1). Every expected
@@ -16,7 +15,7 @@ class GoldenFixtureSpec extends SparkSpec {
     new java.io.File(s"src/test/resources/fixtures/$name").getAbsolutePath
 
   private def tmpStore(): Storage =
-    new Storage(spark, Files.createTempDirectory("graft-golden").toString)
+    new Storage(spark, suiteTempDir("graft-golden"))
 
   test("test_bundle: extract LIKE '%page/1%' -> the 14 reference urls (test_storage.py:24-41)") {
     val s = tmpStore()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.api.Storage
-import java.nio.file.Files
 
 /** Golden replay of the reference's group-verb suite (tests/test_group.py)
   * and the null-no-clobber upsert test (tests/test_null.py) on the public
@@ -14,7 +13,7 @@ class GoldenGroupSpec extends SparkSpec {
     new java.io.File(s"src/test/resources/fixtures/$name").getAbsolutePath
 
   private def tmpStore(): Storage =
-    new Storage(spark, Files.createTempDirectory("graft-golden").toString)
+    new Storage(spark, suiteTempDir("graft-golden"))
 
   private def extractConns(s: Storage): Unit = {
     s.cache("q1", Seq(fixture("test_bundle.json")))

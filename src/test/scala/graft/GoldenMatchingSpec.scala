@@ -2,7 +2,6 @@ package graft
 
 import graft.api.Storage
 import graft.query._
-import java.nio.file.Files
 
 /** Golden matching + binning tests replayed from the reference suite
   * (tests/test_matching.py, tests/test_binning.py) on its fixture bundles:
@@ -15,7 +14,7 @@ class GoldenMatchingSpec extends SparkSpec {
     new java.io.File(s"src/test/resources/fixtures/$name").getAbsolutePath
 
   private def tmpStore(): Storage =
-    new Storage(spark, Files.createTempDirectory("graft-match").toString)
+    new Storage(spark, suiteTempDir("graft-match"))
 
   test("payload_bin LIKE decodes base64 first (test_matching.py:6-39)") {
     val s = tmpStore()

@@ -2,7 +2,6 @@ package graft
 
 import graft.api.Storage
 import graft.ingest.PathAssembler
-import java.nio.file.Files
 
 /** Replays of the reference's smaller suites: timestamp normalization
   * (tests/test_timestamp.py), async-storage basics + deep custom objects
@@ -12,7 +11,7 @@ class GoldenMiscSpec extends SparkSpec {
   private def fixture(name: String): String =
     new java.io.File(s"src/test/resources/fixtures/$name").getAbsolutePath
 
-  private def tmpDir() = Files.createTempDirectory("graft-misc").toString
+  private def tmpDir() = suiteTempDir("graft-misc")
 
   // ---- test_timestamp.py -------------------------------------------------
   // to_datetime parses 0-6 fractional digits; timefmt(prec=3) renders

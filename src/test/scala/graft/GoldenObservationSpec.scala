@@ -1,7 +1,6 @@
 package graft
 
 import graft.api.Storage
-import java.nio.file.Files
 
 /** Golden observation-verb tests replayed from the reference suite
   * (tests/test_value_counts.py, test_number_observed.py, test_summary.py)
@@ -13,7 +12,7 @@ class GoldenObservationSpec extends SparkSpec {
     new java.io.File("src/test/resources/fixtures/test_bundle.json").getAbsolutePath
 
   private def store(): Storage = {
-    val s = new Storage(spark, Files.createTempDirectory("graft-obs").toString)
+    val s = new Storage(spark, suiteTempDir("graft-obs"))
     s.cache("q1", Seq(bundle))
     s
   }
@@ -79,7 +78,7 @@ class GoldenObservationSpec extends SparkSpec {
   }
 
   test("registry values[*].name struct-list predicate (test_stix_patterns.py:37)") {
-    val s = new Storage(spark, Files.createTempDirectory("graft-rk").toString)
+    val s = new Storage(spark, suiteTempDir("graft-rk"))
     s.cache("q1", Seq(
       new java.io.File("src/test/resources/fixtures/regkey-example.json").getAbsolutePath))
     s.extract("x", "windows-registry-key", "q1",

@@ -2,7 +2,6 @@ package graft
 
 import graft.api.Storage
 import graft.query._
-import java.nio.file.Files
 
 /** Replay of the remaining tests/test_storage.py cases not covered by
   * GoldenFixtureSpec — exact row counts and values from the reference's own
@@ -13,7 +12,7 @@ class GoldenStorageSpec extends SparkSpec {
     new java.io.File(s"src/test/resources/fixtures/$name").getAbsolutePath
 
   private def tmpStore(): Storage =
-    new Storage(spark, Files.createTempDirectory("graft-gstor").toString)
+    new Storage(spark, suiteTempDir("graft-gstor"))
 
   private def bundled(): Storage = {
     val s = tmpStore()

@@ -2,7 +2,6 @@ package graft
 
 import graft.api.Storage
 import graft.ingest.{Flatten, Translate}
-import java.nio.file.Files
 
 /** Replay of the reference's fast-translation suite
   * (tests/test_asyncingest.py) against Translate + the cacheTranslated write
@@ -292,7 +291,7 @@ class GoldenTranslateSpec extends SparkSpec {
   }
 
   test("cacheTranslated end-to-end: tables, dedup, edges (test_ingest:589-615)") {
-    val s = new Storage(spark, Files.createTempDirectory("graft-xlate").toString)
+    val s = new Storage(spark, suiteTempDir("graft-xlate"))
     s.cacheTranslated("my-query-id", translated, dataSource)
     val expected = Set("software", "observed-data", "ipv4-addr", "ipv6-addr", "mac-addr",
       "network-traffic", "process", "user-account", "x-oca-asset", "x-oca-event",
@@ -313,7 +312,7 @@ class GoldenTranslateSpec extends SparkSpec {
 
   test("cacheTranslatedEvents: re-ingest is idempotent; new columns evolve the schema") {
     import spark.implicits._
-    val s = new Storage(spark, Files.createTempDirectory("graft-xlate-evo").toString)
+    val s = new Storage(spark, suiteTempDir("graft-xlate-evo"))
     val sm =
       """{"sourceip": [
         |   {"key": "ipv4-addr.value", "object": "src_ip"},
@@ -343,7 +342,7 @@ class GoldenTranslateSpec extends SparkSpec {
 
   test("cacheTranslatedEvents: distributed path matches the driver-side path") {
     import spark.implicits._
-    val s = new Storage(spark, Files.createTempDirectory("graft-xlate-dist").toString)
+    val s = new Storage(spark, suiteTempDir("graft-xlate-dist"))
     // builtinTransformers only on executors: strip events that need the
     // test-local ToLowercaseArray/ValueToList to keep parity simple
     val evs = eventsJson.take(2).map(_.replaceAll("\\s*\"protocol\": \"TCP\",", "")

@@ -9,7 +9,7 @@ class IngestPathsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpStore() =
-    new Storage(spark, Files.createTempDirectory("graft-ingest").toString)
+    new Storage(spark, suiteTempDir("graft-ingest"))
 
   private def mkBundle(ip: String, url: String) =
     s"""{"type":"bundle","id":"bundle--x","objects":[
@@ -151,40 +151,42 @@ class IngestPathsSpec extends SparkSpec {
   }
 
   test("file-format readers: zeek .log TSV, CSV, JSONL -> records -> bundles") {
-    val dir = Files.createTempDirectory("graft-logs")
-    // zeek native conn.log shape: #-directives + TSV, '-' = unset
-    val zeekLog = dir.resolve("conn.log")
-    def tsv(cells: String*): String = cells.mkString("\t")
-    Files.writeString(zeekLog, Seq(
-      "#separator \\x09",
-      tsv("#fields", "ts", "id.orig_h", "id.orig_p", "id.resp_h", "id.resp_p", "proto", "orig_ip_bytes"),
-      tsv("#types", "time", "addr", "port", "addr", "port", "enum", "count"),
-      tsv("1709280000", "10.4.4.4", "44444", "10.5.5.5", "443", "tcp", "512"),
-      tsv("1709280060", "10.4.4.5", "44445", "10.5.5.5", "80", "tcp", "-")
-    ).mkString("", "\n", "\n"))
-    val zeekRecs = LogMapper.recordsFromZeekLog(zeekLog.toString)
-    assert(zeekRecs.length == 2)
-    assert(zeekRecs.head("id.orig_h") == "10.4.4.4" && zeekRecs.head("orig_ip_bytes") == 512L)
-    assert(!zeekRecs(1).contains("orig_ip_bytes")) // '-' dropped
-    assert(zeekRecs.forall(LogMapper.ZeekCsvMapper.detect))
-    val s = tmpStore()
-    s.cache("qz", LogMapper.toBundleJson(zeekRecs, LogMapper.ZeekCsvMapper))
-    assert(s.count("network-traffic") == 2)
+    withTempDir("graft-logs") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      // zeek native conn.log shape: #-directives + TSV, '-' = unset
+      val zeekLog = dir.resolve("conn.log")
+      def tsv(cells: String*): String = cells.mkString("\t")
+      Files.writeString(zeekLog, Seq(
+        "#separator \\x09",
+        tsv("#fields", "ts", "id.orig_h", "id.orig_p", "id.resp_h", "id.resp_p", "proto", "orig_ip_bytes"),
+        tsv("#types", "time", "addr", "port", "addr", "port", "enum", "count"),
+        tsv("1709280000", "10.4.4.4", "44444", "10.5.5.5", "443", "tcp", "512"),
+        tsv("1709280060", "10.4.4.5", "44445", "10.5.5.5", "80", "tcp", "-")
+      ).mkString("", "\n", "\n"))
+      val zeekRecs = LogMapper.recordsFromZeekLog(zeekLog.toString)
+      assert(zeekRecs.length == 2)
+      assert(zeekRecs.head("id.orig_h") == "10.4.4.4" && zeekRecs.head("orig_ip_bytes") == 512L)
+      assert(!zeekRecs(1).contains("orig_ip_bytes")) // '-' dropped
+      assert(zeekRecs.forall(LogMapper.ZeekCsvMapper.detect))
+      val s = tmpStore()
+      s.cache("qz", LogMapper.toBundleJson(zeekRecs, LogMapper.ZeekCsvMapper))
+      assert(s.count("network-traffic") == 2)
 
-    val csv = dir.resolve("events.csv")
-    Files.writeString(csv,
-      "url,user_agent,source,date,time\n/a.php,curl/8,198.51.100.9,2024-04-01,01:02:03\n")
-    val csvRecs = LogMapper.recordsFromCsv(csv.toString)
-    assert(csvRecs.length == 1 && csvRecs.head("source") == "198.51.100.9")
-    assert(LogMapper.IscHoneypotJsonMapper.detect(csvRecs.head))
+      val csv = dir.resolve("events.csv")
+      Files.writeString(csv,
+        "url,user_agent,source,date,time\n/a.php,curl/8,198.51.100.9,2024-04-01,01:02:03\n")
+      val csvRecs = LogMapper.recordsFromCsv(csv.toString)
+      assert(csvRecs.length == 1 && csvRecs.head("source") == "198.51.100.9")
+      assert(LogMapper.IscHoneypotJsonMapper.detect(csvRecs.head))
 
-    val jsonl = dir.resolve("dns.jsonl")
-    Files.writeString(jsonl,
-      """{"@stream":"dns","ts":1709280060,"id_orig_h":"10.4.4.4","id_orig_p":5353,"id_resp_h":"10.4.4.1","id_resp_p":53,"proto":"udp","query":"x.test","answers":["198.51.100.1"]}
-        |""".stripMargin)
-    val jsonRecs = LogMapper.recordsFromJsonl(jsonl.toString)
-    assert(jsonRecs.length == 1)
-    assert(LogMapper.detectPathMapper(jsonRecs.head).contains(LogMapper.ZeekJsonMapper))
+      val jsonl = dir.resolve("dns.jsonl")
+      Files.writeString(jsonl,
+        """{"@stream":"dns","ts":1709280060,"id_orig_h":"10.4.4.4","id_orig_p":5353,"id_resp_h":"10.4.4.1","id_resp_p":53,"proto":"udp","query":"x.test","answers":["198.51.100.1"]}
+          |""".stripMargin)
+      val jsonRecs = LogMapper.recordsFromJsonl(jsonl.toString)
+      assert(jsonRecs.length == 1)
+      assert(LogMapper.detectPathMapper(jsonRecs.head).contains(LogMapper.ZeekJsonMapper))
+    }
   }
 
   test("cache() streams bundles from an http URL") {

@@ -21,8 +21,7 @@ class LayoutSpec extends SparkSpec {
       "Exchange hashpartitioning".r
         .findAllIn(df.queryExecution.executedPlan.toString)
         .length
-    val s = new graft.api.Storage(
-      spark, java.nio.file.Files.createTempDirectory("graft-finish").toString)
+    val s = new graft.api.Storage(spark, suiteTempDir("graft-finish"))
     val bundle =
       """{"type":"bundle","id":"bundle--bf","objects":[
         |{"type":"observed-data","id":"observed-data--of",
@@ -102,141 +101,144 @@ class LayoutSpec extends SparkSpec {
 
   test("compactionReport: counts base/delta files and rows, flags past-threshold buckets") {
     import graft.ingest.UpsertWriter
-    import graft.operators.Layout
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    def batch(tag: String, n: Int) = {
-      import spark.implicits._
-      (0 until n).map(i => (s"$tag-$i", i.toLong)).toDF("id", "v")
+    import graft.ingest.UpsertWriter.AppendKey
+    withTempDir("graft-compact") { dir =>
+      def batch(tag: String, n: Int) = {
+        import spark.implicits._
+        (0 until n).map(i => (s"$tag-$i", i.toLong)).toDF("id", "v")
+      }
+      UpsertWriter.appendKeyed(spark, dir, "t", batch("base", 320), AppendKey.Id)
+      (0 until 3).foreach(b =>
+        UpsertWriter.appendKeyed(spark, dir, "t", batch(s"d$b", 64), AppendKey.Id))
+      val rep = UpsertWriter.compactionReport(spark, dir, "t").collect()
+      assert(rep.nonEmpty)
+      // totals reconcile with the table
+      val total = UpsertWriter.readTable(spark, dir, "t").count()
+      assert(rep.map(r => r.getAs[Long]("base_rows") + r.getAs[Long]("delta_rows")).sum == total)
+      // three pure-insert batches -> up to 3 delta files per bucket, below
+      // the default threshold: nothing flagged
+      assert(rep.forall(!_.getAs[Boolean]("needs_compaction")))
+      assert(rep.exists(_.getAs[Long]("n_delta_files") > 0))
+      // a tighter threshold flags exactly the buckets past it
+      val tight = UpsertWriter.compactionReport(spark, dir, "t", deltaFilesMax = 1).collect()
+      tight.foreach(r =>
+        assert(r.getAs[Boolean]("needs_compaction") == (r.getAs[Long]("n_delta_files") > 1)))
+      assert(tight.exists(_.getAs[Boolean]("needs_compaction")))
     }
-    UpsertWriter.insertIgnore(spark, dir, "t", batch("base", 320))
-    (0 until 3).foreach(b => UpsertWriter.insertIgnore(spark, dir, "t", batch(s"d$b", 64)))
-    val rep = Layout.compactionReport(spark, dir, "t").collect()
-    assert(rep.nonEmpty)
-    // totals reconcile with the table
-    val total = UpsertWriter.readTable(spark, dir, "t").count()
-    assert(rep.map(r => r.getAs[Long]("base_rows") + r.getAs[Long]("delta_rows")).sum == total)
-    // three pure-insert batches -> up to 3 delta files per bucket, below
-    // the default threshold: nothing flagged
-    assert(rep.forall(!_.getAs[Boolean]("needs_compaction")))
-    assert(rep.exists(_.getAs[Long]("n_delta_files") > 0))
-    // a tighter threshold flags exactly the buckets past it
-    val tight = Layout.compactionReport(spark, dir, "t", deltaFilesMax = 1).collect()
-    tight.foreach(r =>
-      assert(r.getAs[Boolean]("needs_compaction") == (r.getAs[Long]("n_delta_files") > 1)))
-    assert(tight.exists(_.getAs[Boolean]("needs_compaction")))
   }
 
   test("zoneMap + readPruned: equals the full filtered read and opens fewer files") {
     import graft.operators.Layout
-    val dir = java.nio.file.Files.createTempDirectory("graft-zone").toString
-    val rows = spark.range(20000).select(
-      col("id"),
-      ((col("id") * 2654435761L) % 10007L).as("a"),
-      ((col("id") * 7919L) % 9973L).as("b"))
-    Layout.zOrderRepartition(rows, "a", "b", numFiles = 16, bits = 14)
-      .write.mode("overwrite").parquet(dir)
-    val zmap = Layout.zoneMap(spark, dir, Seq("a", "b"))
-    val nFiles = zmap.count()
-    assert(nFiles == 16)
-    // equality law: pruned read == full read with the same predicate
-    val pruned = Layout.readPruned(spark, dir, zmap, "a", 100L, 800L)
-    val full = spark.read.parquet(dir).where(col("a") >= 100L && col("a") <= 800L)
-    assert(pruned.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
-      full.select("id").collect().map(_.getLong(0)).sorted.toSeq)
-    // and it actually PRUNES: the clustered layout confines a 7% range
-    // of `a` to a strict subset of files
-    assert(pruned.inputFiles.length < nFiles,
-      s"expected pruning, opened ${pruned.inputFiles.length}/$nFiles files")
-    // empty range prunes everything and returns no rows
-    val none = Layout.readPruned(spark, dir, zmap, "a", 20000L, 30000L)
-    assert(none.count() == 0)
-    // STALENESS GUARD: append files the map has never seen — the read
-    // must fall back to the full filtered scan (their rows included),
-    // not silently skip them because the map says nothing about them
-    spark.range(5).select(
-      (col("id") + 50000L).as("id"),
-      lit(400L).as("a"),
-      lit(1L).as("b"))
-      .coalesce(1).write.mode("append").parquet(dir)
-    val afterAppend = Layout.readPruned(spark, dir, zmap, "a", 100L, 800L)
-    val fullAfter = spark.read.parquet(dir).where(col("a") >= 100L && col("a") <= 800L)
-    assert(afterAppend.count() == fullAfter.count())
-    assert(afterAppend.where(col("id") >= 50000L).count() == 5,
-      "appended rows must be visible despite the stale zone map")
-    // rebuilding the map restores pruning
-    val zmap2 = Layout.zoneMap(spark, dir, Seq("a", "b"))
-    val repruned = Layout.readPruned(spark, dir, zmap2, "a", 100L, 800L)
-    assert(repruned.count() == fullAfter.count())
-    assert(repruned.inputFiles.length < spark.read.parquet(dir).inputFiles.length)
+    withTempDir("graft-zone") { dir =>
+      val rows = spark.range(20000).select(
+        col("id"),
+        ((col("id") * 2654435761L) % 10007L).as("a"),
+        ((col("id") * 7919L) % 9973L).as("b"))
+      Layout.zOrderRepartition(rows, "a", "b", numFiles = 16, bits = 14)
+        .write.mode("overwrite").parquet(dir)
+      val zmap = Layout.zoneMap(spark, dir, Seq("a", "b"))
+      val nFiles = zmap.count()
+      assert(nFiles == 16)
+      // equality law: pruned read == full read with the same predicate
+      val pruned = Layout.readPruned(spark, dir, zmap, "a", 100L, 800L)
+      val full = spark.read.parquet(dir).where(col("a") >= 100L && col("a") <= 800L)
+      assert(pruned.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
+        full.select("id").collect().map(_.getLong(0)).sorted.toSeq)
+      // and it actually PRUNES: the clustered layout confines a 7% range
+      // of `a` to a strict subset of files
+      assert(pruned.inputFiles.length < nFiles,
+        s"expected pruning, opened ${pruned.inputFiles.length}/$nFiles files")
+      // empty range prunes everything and returns no rows
+      val none = Layout.readPruned(spark, dir, zmap, "a", 20000L, 30000L)
+      assert(none.count() == 0)
+      // STALENESS GUARD: append files the map has never seen — the read
+      // must fall back to the full filtered scan (their rows included),
+      // not silently skip them because the map says nothing about them
+      spark.range(5).select(
+        (col("id") + 50000L).as("id"),
+        lit(400L).as("a"),
+        lit(1L).as("b"))
+        .coalesce(1).write.mode("append").parquet(dir)
+      val afterAppend = Layout.readPruned(spark, dir, zmap, "a", 100L, 800L)
+      val fullAfter = spark.read.parquet(dir).where(col("a") >= 100L && col("a") <= 800L)
+      assert(afterAppend.count() == fullAfter.count())
+      assert(afterAppend.where(col("id") >= 50000L).count() == 5,
+        "appended rows must be visible despite the stale zone map")
+      // rebuilding the map restores pruning
+      val zmap2 = Layout.zoneMap(spark, dir, Seq("a", "b"))
+      val repruned = Layout.readPruned(spark, dir, zmap2, "a", 100L, 800L)
+      assert(repruned.count() == fullAfter.count())
+      assert(repruned.inputFiles.length < spark.read.parquet(dir).inputFiles.length)
 
-    // MAINTAINED CENSUS (the object-store scale path): when the store
-    // hands readPruned its current census, the clean path must not list
-    // the directory at all — a per-read recursive LIST over a 100 TB
-    // table is millions of keys
-    val current = Layout.dirCensus(dir) // one walk, maintained thereafter
-    assert(current == Layout.fileCensus(zmap2), "fresh map must match the dir census")
-    val walksBefore = Layout.censusWalks
-    val viaCensus = Layout.readPruned(spark, dir, zmap2, "a", 100L, 800L, Some(current))
-    assert(viaCensus.count() == fullAfter.count())
-    assert(viaCensus.inputFiles.length < spark.read.parquet(dir).inputFiles.length)
-    assert(Layout.censusWalks == walksBefore,
-      "clean path with a maintained census must not walk the directory")
-    // a census that disagrees with the map (stale map after an append)
-    // falls back to the full filtered read — still without walking
-    spark.range(3).select((col("id") + 90000L).as("id"), lit(500L).as("a"), lit(2L).as("b"))
-      .coalesce(1).write.mode("append").parquet(dir)
-    val appended = Layout.dirCensus(dir) // the store's maintained census after append
-    val fallback = Layout.readPruned(spark, dir, zmap2, "a", 100L, 800L, Some(appended))
-    assert(fallback.where(col("id") >= 90000L).count() == 3,
-      "rows behind a stale map must be visible through the census fallback")
-    assert(Layout.censusWalks == walksBefore)
+      // MAINTAINED CENSUS (the object-store scale path): when the store
+      // hands readPruned its current census, the clean path must not list
+      // the directory at all — a per-read recursive LIST over a 100 TB
+      // table is millions of keys
+      val current = Layout.dirCensus(dir) // one walk, maintained thereafter
+      assert(current == Layout.fileCensus(zmap2), "fresh map must match the dir census")
+      val walksBefore = Layout.censusWalks
+      val viaCensus = Layout.readPruned(spark, dir, zmap2, "a", 100L, 800L, Some(current))
+      assert(viaCensus.count() == fullAfter.count())
+      assert(viaCensus.inputFiles.length < spark.read.parquet(dir).inputFiles.length)
+      assert(Layout.censusWalks == walksBefore,
+        "clean path with a maintained census must not walk the directory")
+      // a census that disagrees with the map (stale map after an append)
+      // falls back to the full filtered read — still without walking
+      spark.range(3).select((col("id") + 90000L).as("id"), lit(500L).as("a"), lit(2L).as("b"))
+        .coalesce(1).write.mode("append").parquet(dir)
+      val appended = Layout.dirCensus(dir) // the store's maintained census after append
+      val fallback = Layout.readPruned(spark, dir, zmap2, "a", 100L, 800L, Some(appended))
+      assert(fallback.where(col("id") >= 90000L).count() == 3,
+        "rows behind a stale map must be visible through the census fallback")
+      assert(Layout.censusWalks == walksBefore)
 
-    // INCREMENTAL MAINTENANCE law: updating the stale map scans only the
-    // appended files and equals a full rebuild — and the updated map's
-    // census matches the store again, so pruning resumes
-    def norm(m: org.apache.spark.sql.DataFrame) = m
-      .collect().map(r => r.toSeq.map(String.valueOf).toList)
-      .sortBy(_.head)
-    // the maintenance pass must be driver-light: only the ONE appended
-    // file's path crosses the driver (seam-counted), and the censuses are
-    // two-long aggregates, never path collects
-    val pathRowsBefore = Layout.driverPathRows
-    val updated = Layout.zoneMapIncremental(spark, dir, Seq("a", "b"), zmap2)
-    updated.count() // force the lazy joins so the fresh collect has happened
-    assert(Layout.driverPathRows - pathRowsBefore == 1,
-      s"incremental update materialized ${Layout.driverPathRows - pathRowsBefore} " +
-        "path rows on the driver; only the appended file should cross")
-    val rebuilt = Layout.zoneMap(spark, dir, Seq("a", "b"))
-    assert(norm(updated).map(_.tail).sortBy(_.toString).toSeq ==
-      norm(rebuilt).map(_.tail).sortBy(_.toString).toSeq)
-    val censusRowsBefore = Layout.driverPathRows
-    assert(Layout.fileCensus(updated) == Layout.dirCensus(dir))
-    assert(Layout.driverPathRows == censusRowsBefore,
-      "fileCensus must aggregate, not collect paths")
-    // side-table round trip: save map+census, load, and the clean pruned
-    // read uses the loaded census without walking the data tree
-    val mapDir = java.nio.file.Files.createTempDirectory("graft-zmside").toString
-    Layout.saveZoneMap(updated, mapDir)
-    val (loadedMap, loadedCensus) = Layout.loadZoneMap(spark, mapDir)
-    assert(loadedCensus == Layout.fileCensus(updated))
-    val walksBeforeSide = Layout.censusWalks
-    val viaSide = Layout.readPruned(spark, dir, loadedMap, "a", 100L, 800L, Some(loadedCensus))
-    assert(viaSide.count() ==
-      spark.read.parquet(dir).where(col("a") >= 100L && col("a") <= 800L).count())
-    assert(Layout.censusWalks == walksBeforeSide)
-    graft.ingest.FsUtil.deleteTree(java.nio.file.Paths.get(mapDir))
-    val repr2 = Layout.readPruned(spark, dir, updated, "a", 100L, 800L,
-      Some(Layout.fileCensus(updated)))
-    assert(repr2.count() ==
-      spark.read.parquet(dir).where(col("a") >= 100L && col("a") <= 800L).count())
-    // deletion face: drop one parquet file — the incremental update must
-    // shed its entry (still equal to a rebuild on the shrunken dir)
-    val victim = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(f => f.toString.endsWith(".parquet")).findFirst().get()
-    java.nio.file.Files.delete(victim)
-    val afterDel = Layout.zoneMapIncremental(spark, dir, Seq("a", "b"), updated)
-    assert(Layout.fileCensus(afterDel) == Layout.dirCensus(dir))
-    assert(afterDel.count() == updated.count() - 1)
+      // INCREMENTAL MAINTENANCE law: updating the stale map scans only the
+      // appended files and equals a full rebuild — and the updated map's
+      // census matches the store again, so pruning resumes
+      def norm(m: org.apache.spark.sql.DataFrame) = m
+        .collect().map(r => r.toSeq.map(String.valueOf).toList)
+        .sortBy(_.head)
+      // the maintenance pass must be driver-light: only the ONE appended
+      // file's path crosses the driver (seam-counted), and the censuses are
+      // two-long aggregates, never path collects
+      val pathRowsBefore = Layout.driverPathRows
+      val updated = Layout.zoneMapIncremental(spark, dir, Seq("a", "b"), zmap2)
+      updated.count() // force the lazy joins so the fresh collect has happened
+      assert(Layout.driverPathRows - pathRowsBefore == 1,
+        s"incremental update materialized ${Layout.driverPathRows - pathRowsBefore} " +
+          "path rows on the driver; only the appended file should cross")
+      val rebuilt = Layout.zoneMap(spark, dir, Seq("a", "b"))
+      assert(norm(updated).map(_.tail).sortBy(_.toString).toSeq ==
+        norm(rebuilt).map(_.tail).sortBy(_.toString).toSeq)
+      val censusRowsBefore = Layout.driverPathRows
+      assert(Layout.fileCensus(updated) == Layout.dirCensus(dir))
+      assert(Layout.driverPathRows == censusRowsBefore,
+        "fileCensus must aggregate, not collect paths")
+      // side-table round trip: save map+census, load, and the clean pruned
+      // read uses the loaded census without walking the data tree
+      withTempDir("graft-zmside") { mapDir =>
+        Layout.saveZoneMap(updated, mapDir)
+        val (loadedMap, loadedCensus) = Layout.loadZoneMap(spark, mapDir)
+        assert(loadedCensus == Layout.fileCensus(updated))
+        val walksBeforeSide = Layout.censusWalks
+        val viaSide = Layout.readPruned(spark, dir, loadedMap, "a", 100L, 800L, Some(loadedCensus))
+        assert(viaSide.count() ==
+          spark.read.parquet(dir).where(col("a") >= 100L && col("a") <= 800L).count())
+        assert(Layout.censusWalks == walksBeforeSide)
+      }
+      val repr2 = Layout.readPruned(spark, dir, updated, "a", 100L, 800L,
+        Some(Layout.fileCensus(updated)))
+      assert(repr2.count() ==
+        spark.read.parquet(dir).where(col("a") >= 100L && col("a") <= 800L).count())
+      // deletion face: drop one parquet file — the incremental update must
+      // shed its entry (still equal to a rebuild on the shrunken dir)
+      val victim = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(f => f.toString.endsWith(".parquet")).findFirst().get()
+      java.nio.file.Files.delete(victim)
+      val afterDel = Layout.zoneMapIncremental(spark, dir, Seq("a", "b"), updated)
+      assert(Layout.fileCensus(afterDel) == Layout.dirCensus(dir))
+      assert(afterDel.count() == updated.count() - 1)
+    }
   }
 
   test("shuffleAdvisor: plan-stat arithmetic, scale monotonicity, no job") {
@@ -259,7 +261,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle") {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-wh")
     val a = (1 to 500).map(i => (i.toLong, s"a$i")).toDF("id", "av")
     val b = (1 to 500).map(i => (i.toLong, s"b$i")).toDF("id", "bv")
     Layout.writeBucketed(a, "bucketed_a", "id", 4)
@@ -282,29 +283,27 @@ class LayoutSpec extends SparkSpec {
   test("clusteringReport: sorted layout scores far below shuffled; flat domain is NULL") {
     val n = 4000
     val base = (0 until n).map(i => (i.toLong, (i * 37 % n).toLong)).toDF("a", "b")
-    val sortedDir = java.nio.file.Files.createTempDirectory("graft-clus-s").toString
-    val shufDir = java.nio.file.Files.createTempDirectory("graft-clus-r").toString
-    // clustered: range-partitioned on a -> each file owns a narrow slice
-    base.repartitionByRange(8, col("a")).write.mode("overwrite").parquet(sortedDir)
-    // shuffled: hash on a -> every file spans nearly the whole domain
-    base.repartition(8, col("a")).write.mode("overwrite").parquet(shufDir)
-    def factor(dir: String) =
-      Layout.clusteringReport(Layout.zoneMap(spark, dir, Seq("a")), "a")
-        .head().getAs[Double]("clustering_factor")
-    val (fs, fr) = (factor(sortedDir), factor(shufDir))
-    assert(fs < 0.2, s"range-partitioned layout should cluster tightly, got $fs")
-    assert(fr > 0.8, s"hash layout should span the domain per file, got $fr")
-    assert(fs < fr / 4, s"factor must discriminate: sorted $fs vs shuffled $fr")
-    // files_per_point ~ n_files for the shuffled layout, ~1 for sorted
-    val rep = Layout.clusteringReport(Layout.zoneMap(spark, shufDir, Seq("a")), "a").head()
-    assert(rep.getAs[Double]("files_per_point") > rep.getLong(0) * 0.8)
-    // single-value domain: zero width -> NULL factor, not a divide blowup
-    val flatDir = java.nio.file.Files.createTempDirectory("graft-clus-f").toString
-    (0 until 100).map(_ => (7L, 1L)).toDF("a", "b")
-      .repartition(4).write.mode("overwrite").parquet(flatDir)
-    val flat = Layout.clusteringReport(Layout.zoneMap(spark, flatDir, Seq("a")), "a").head()
-    assert(flat.isNullAt(2) && flat.isNullAt(3))
-    Seq(sortedDir, shufDir, flatDir).foreach(d =>
-      graft.ingest.FsUtil.deleteTree(java.nio.file.Paths.get(d)))
+    withTempDir("graft-clus") { root =>
+      val (sortedDir, shufDir, flatDir) = (s"$root/sorted", s"$root/shuf", s"$root/flat")
+      // clustered: range-partitioned on a -> each file owns a narrow slice
+      base.repartitionByRange(8, col("a")).write.mode("overwrite").parquet(sortedDir)
+      // shuffled: hash on a -> every file spans nearly the whole domain
+      base.repartition(8, col("a")).write.mode("overwrite").parquet(shufDir)
+      def factor(dir: String) =
+        Layout.clusteringReport(Layout.zoneMap(spark, dir, Seq("a")), "a")
+          .head().getAs[Double]("clustering_factor")
+      val (fs, fr) = (factor(sortedDir), factor(shufDir))
+      assert(fs < 0.2, s"range-partitioned layout should cluster tightly, got $fs")
+      assert(fr > 0.8, s"hash layout should span the domain per file, got $fr")
+      assert(fs < fr / 4, s"factor must discriminate: sorted $fs vs shuffled $fr")
+      // files_per_point ~ n_files for the shuffled layout, ~1 for sorted
+      val rep = Layout.clusteringReport(Layout.zoneMap(spark, shufDir, Seq("a")), "a").head()
+      assert(rep.getAs[Double]("files_per_point") > rep.getLong(0) * 0.8)
+      // single-value domain: zero width -> NULL factor, not a divide blowup
+      (0 until 100).map(_ => (7L, 1L)).toDF("a", "b")
+        .repartition(4).write.mode("overwrite").parquet(flatDir)
+      val flat = Layout.clusteringReport(Layout.zoneMap(spark, flatDir, Seq("a")), "a").head()
+      assert(flat.isNullAt(2) && flat.isNullAt(3))
+    }
   }
 }

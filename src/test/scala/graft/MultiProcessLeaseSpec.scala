@@ -73,20 +73,16 @@ class MultiProcessLeaseSpec extends SparkSpec {
       new String(Files.readAllBytes(Paths.get(dir, "counter.txt")), "UTF-8").trim.toLong
     assert(counted == 3L * nBatches,
       s"counter $counted != ${3 * nBatches}: two processes held the lease at once")
-
-    graft.ingest.FsUtil.deleteTree(Paths.get(dir))
   }
 
   test("three OS processes upserting one table: no lost rows, no lost counter updates") {
-    runContention(Files.createTempDirectory("graft-mproc").toString,
-      nBatches = 4, perBatch = 10, fsMode = "")
+    withTempDir("graft-mproc")(runContention(_, nBatches = 4, perBatch = 10, fsMode = ""))
   }
 
   test("the same three-process contention holds under OBJECT-STORE semantics") {
     // every directory swap is copy+delete (non-atomic), createNew is the
     // conditional PUT: exclusion must rest on createNew alone — proven
     // here between real OS processes sharing only the store tree
-    runContention(Files.createTempDirectory("graft-mproc-s3").toString,
-      nBatches = 3, perBatch = 8, fsMode = "s3")
+    withTempDir("graft-mproc-s3")(runContention(_, nBatches = 3, perBatch = 8, fsMode = "s3"))
   }
 }

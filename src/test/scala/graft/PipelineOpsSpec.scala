@@ -766,21 +766,21 @@ class PipelineOpsSpec extends SparkSpec {
     val d = (1 to 60).map(i => (i, (i % 7 + 1).toLong)).toDF("doc_id", "n_tokens")
     val assigned = Sampling.packShards(d, "doc_id", "n_tokens", 40L)
       .select("doc_id", "n_tokens", "shard_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft-shard-export").toString
-    Sampling.writeShards(assigned, dir)
-    val shardDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("shard_id="))
-    assert(shardDirs.length == assigned.select("shard_id").distinct().count())
-    shardDirs.foreach { sd =>
-      val files = sd.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length == 1, s"${sd.getName}: expected one file, got ${files.length}")
+    withTempDir("graft-shard-export") { dir =>
+      Sampling.writeShards(assigned, dir)
+      val shardDirs = new java.io.File(dir).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("shard_id="))
+      assert(shardDirs.length == assigned.select("shard_id").distinct().count())
+      shardDirs.foreach { sd =>
+        val files = sd.listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(files.length == 1, s"${sd.getName}: expected one file, got ${files.length}")
+      }
+      val back = spark.read.parquet(dir)
+        .select(col("doc_id"), col("n_tokens"), col("shard_id").cast("long"))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+      val want = assigned.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+      assert(back == want)
     }
-    val back = spark.read.parquet(dir)
-      .select(col("doc_id"), col("n_tokens"), col("shard_id").cast("long"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val want = assigned.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(back == want)
-    graft.ingest.FsUtil.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("packShards never exceeds budget by more than one document") {

@@ -16,6 +16,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     try body(dir.toString) finally graft.ingest.FsUtil.deleteTree(dir)
   }
+
+  private var suiteRoot: java.nio.file.Path = null
+
+  /** A fresh dir named `prefix*` for a store that outlives any one
+    * block (a spec's store factory, a class-level store): it lives under
+    * one suite-scoped temp root that afterAll deletes. */
+  def suiteTempDir(prefix: String): String = synchronized {
+    if (suiteRoot == null) suiteRoot = java.nio.file.Files.createTempDirectory("graft-suite")
+    java.nio.file.Files.createTempDirectory(suiteRoot, prefix).toString
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally synchronized {
+      if (suiteRoot != null) graft.ingest.FsUtil.deleteTree(suiteRoot)
+      suiteRoot = null
+    }
 }
 
 object SparkSpec {

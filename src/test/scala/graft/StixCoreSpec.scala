@@ -4,14 +4,13 @@ import graft.api.{Deref, IncompatibleType, Storage, StixPatternError}
 import graft.ingest.{Flatten, UpsertWriter}
 import graft.model.{StixId, StixMeta, Uuid5}
 import java.util.UUID
-import java.nio.file.Files
 
 /** Semantics pinned from the reference: deterministic ids, graph flatten,
   * upsert merge rules, pattern compilation, verbs, auto-deref. */
 class StixCoreSpec extends SparkSpec {
 
   private def tmpStore(): Storage =
-    new Storage(spark, Files.createTempDirectory("graft-store").toString)
+    new Storage(spark, suiteTempDir("graft-store"))
 
   // A hand-built STIX 2.0-style bundle (observation with indexed objects).
   private val bundle20 =
@@ -141,24 +140,25 @@ class StixCoreSpec extends SparkSpec {
   }
 
   test("upsert merge: min/max/sum observed, newest-non-null, no null clobber") {
-    val dir = Files.createTempDirectory("graft-upsert").toString
-    UpsertWriter.upsert(spark, dir, "t", UpsertWriter.rowsToDF(spark, Seq(
-      Map("id" -> "a", "first_observed" -> "2024-01-02", "last_observed" -> "2024-01-02",
-        "number_observed" -> 2L, "name" -> "orig", "extra" -> "keep"))))
-    UpsertWriter.upsert(spark, dir, "t", UpsertWriter.rowsToDF(spark, Seq(
-      Map("id" -> "a", "first_observed" -> "2024-01-01", "last_observed" -> "2024-01-03",
-        "number_observed" -> 3L, "name" -> "new", "extra" -> null, "added" -> "evolved"),
-      Map("id" -> "b", "name" -> "other"))))
-    val rows = spark.read.parquet(s"$dir/t.parquet").collect()
-      .map(r => r.getAs[String]("id") -> r).toMap
-    val a = rows("a")
-    assert(a.getAs[String]("first_observed") == "2024-01-01")
-    assert(a.getAs[String]("last_observed") == "2024-01-03")
-    assert(a.getAs[Long]("number_observed") == 5L)
-    assert(a.getAs[String]("name") == "new")    // newest non-null wins
-    assert(a.getAs[String]("extra") == "keep")  // null does not clobber
-    assert(a.getAs[String]("added") == "evolved") // schema evolution
-    assert(rows("b").getAs[String]("added") == null)
+    withTempDir("graft-upsert") { dir =>
+      UpsertWriter.upsert(spark, dir, "t", UpsertWriter.rowsToDF(spark, Seq(
+        Map("id" -> "a", "first_observed" -> "2024-01-02", "last_observed" -> "2024-01-02",
+          "number_observed" -> 2L, "name" -> "orig", "extra" -> "keep"))))
+      UpsertWriter.upsert(spark, dir, "t", UpsertWriter.rowsToDF(spark, Seq(
+        Map("id" -> "a", "first_observed" -> "2024-01-01", "last_observed" -> "2024-01-03",
+          "number_observed" -> 3L, "name" -> "new", "extra" -> null, "added" -> "evolved"),
+        Map("id" -> "b", "name" -> "other"))))
+      val rows = spark.read.parquet(s"$dir/t.parquet").collect()
+        .map(r => r.getAs[String]("id") -> r).toMap
+      val a = rows("a")
+      assert(a.getAs[String]("first_observed") == "2024-01-01")
+      assert(a.getAs[String]("last_observed") == "2024-01-03")
+      assert(a.getAs[Long]("number_observed") == 5L)
+      assert(a.getAs[String]("name") == "new")    // newest non-null wins
+      assert(a.getAs[String]("extra") == "keep")  // null does not clobber
+      assert(a.getAs[String]("added") == "evolved") // schema evolution
+      assert(rows("b").getAs[String]("added") == null)
+    }
   }
 
   test("cache + extract + values: end-to-end hunt flow") {
@@ -416,119 +416,123 @@ class StixCoreSpec extends SparkSpec {
   }
 
   test("views persist across Storage instances via the __symtable journal") {
-    val dir = Files.createTempDirectory("graft-persist").toString
-    val s1 = new Storage(spark, dir)
-    s1.cache("q1", bundle20)
-    s1.cache("q2", bundle20b)
-    s1.extract("urls", "url", "q1", "[url:value LIKE '%page%']")
-    s1.extract("u2", "url", "q2", "")
-    s1.merge("all_urls", Seq("urls", "u2"))
-    s1.assign("sorted", "all_urls", "sort", "value", asc = false)
-    s1.setAppdata("urls", """{"note":"kept"}""")
-    s1.renameView("u2", "u2r")
+    withTempDir("graft-persist") { dir =>
+      val s1 = new Storage(spark, dir)
+      s1.cache("q1", bundle20)
+      s1.cache("q2", bundle20b)
+      s1.extract("urls", "url", "q1", "[url:value LIKE '%page%']")
+      s1.extract("u2", "url", "q2", "")
+      s1.merge("all_urls", Seq("urls", "u2"))
+      s1.assign("sorted", "all_urls", "sort", "value", asc = false)
+      s1.setAppdata("urls", """{"note":"kept"}""")
+      s1.renameView("u2", "u2r")
 
-    // a brand-new Storage over the same workdir rebuilds the views
-    val s2 = new Storage(spark, dir)
-    assert(s2.views().toSet == Set("urls", "u2r", "all_urls", "sorted"))
-    assert(s2.count("urls") == 1 && s2.count("all_urls") == 2)
-    assert(s2.values("value", "sorted") ==
-      Seq("http://example.com/page/1", "http://example.com/other"))
-    assert(s2.getAppdata("urls").contains("""{"note":"kept"}"""))
-    assert(s2.tableType("urls").contains("url"))
-    // replayed views see data cached AFTER the journal entry was written
-    // (same q1 provenance so the extract's semi-join admits the new row)
-    s2.cache("q1",
-      bundle20.replace("page/1", "page/9").replace("observed-data--o1", "observed-data--o3")
-        .replace("bundle--b1", "bundle--b3"))
-    assert(s2.count("urls") == 2) // lazy replay over current base tables
+      // a brand-new Storage over the same workdir rebuilds the views
+      val s2 = new Storage(spark, dir)
+      assert(s2.views().toSet == Set("urls", "u2r", "all_urls", "sorted"))
+      assert(s2.count("urls") == 1 && s2.count("all_urls") == 2)
+      assert(s2.values("value", "sorted") ==
+        Seq("http://example.com/page/1", "http://example.com/other"))
+      assert(s2.getAppdata("urls").contains("""{"note":"kept"}"""))
+      assert(s2.tableType("urls").contains("url"))
+      // replayed views see data cached AFTER the journal entry was written
+      // (same q1 provenance so the extract's semi-join admits the new row)
+      s2.cache("q1",
+        bundle20.replace("page/1", "page/9").replace("observed-data--o1", "observed-data--o3")
+          .replace("bundle--b1", "bundle--b3"))
+      assert(s2.count("urls") == 2) // lazy replay over current base tables
+    }
   }
 
   test("snapshot verbs: pin through Storage, journaled, replay-safe round trip") {
-    val dir = Files.createTempDirectory("graft-snapverb").toString
-    val s1 = new Storage(spark, dir)
-    s1.cache("q1", bundle20)
-    val before = s1.catalog.resolve("url")
-      .select("id", "value").collect().map(_.toSeq).toSet
-    s1.snapshot("url", "s1")
-    s1.cache("q2", bundle20b)
-    // the pin reads the pre-churn state; the live table moved
-    assert(s1.readSnapshot("url", "s1")
-      .select("id", "value").collect().map(_.toSeq).toSet == before)
-    assert(s1.catalog.resolve("url").count() > before.size)
-    assert(s1.snapshots("url") == Seq("s1"))
-    // pins are immutable: re-pinning an existing name fails loudly
-    intercept[IllegalStateException] { s1.snapshot("url", "s1") }
-    // journal carries the provenance lines
-    val journal = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "__symtable.jsonl")), "UTF-8")
-    assert(journal.contains("\"snapshot\"") && journal.contains("\"s1\""))
-    // a brand-new Storage replays the journal WITHOUT re-executing the pin
-    // (re-pinning would throw "already exists") and still sees it
-    val s2 = new Storage(spark, dir)
-    assert(s2.snapshots("url") == Seq("s1"))
-    assert(s2.readSnapshot("url", "s1")
-      .select("id", "value").collect().map(_.toSeq).toSet == before)
-    // drop is journaled + idempotent; replay after drop stays clean
-    s2.dropSnapshot("url", "s1")
-    s2.dropSnapshot("url", "s1")
-    assert(s2.snapshots("url").isEmpty)
-    val s3 = new Storage(spark, dir)
-    assert(s3.snapshots("url").isEmpty)
-    intercept[IllegalArgumentException] { s3.readSnapshot("url", "s1") }
+    withTempDir("graft-snapverb") { dir =>
+      val s1 = new Storage(spark, dir)
+      s1.cache("q1", bundle20)
+      val before = s1.catalog.resolve("url")
+        .select("id", "value").collect().map(_.toSeq).toSet
+      s1.snapshot("url", "s1")
+      s1.cache("q2", bundle20b)
+      // the pin reads the pre-churn state; the live table moved
+      assert(s1.readSnapshot("url", "s1")
+        .select("id", "value").collect().map(_.toSeq).toSet == before)
+      assert(s1.catalog.resolve("url").count() > before.size)
+      assert(s1.snapshots("url") == Seq("s1"))
+      // pins are immutable: re-pinning an existing name fails loudly
+      intercept[IllegalStateException] { s1.snapshot("url", "s1") }
+      // journal carries the provenance lines
+      val journal = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "__symtable.jsonl")), "UTF-8")
+      assert(journal.contains("\"snapshot\"") && journal.contains("\"s1\""))
+      // a brand-new Storage replays the journal WITHOUT re-executing the pin
+      // (re-pinning would throw "already exists") and still sees it
+      val s2 = new Storage(spark, dir)
+      assert(s2.snapshots("url") == Seq("s1"))
+      assert(s2.readSnapshot("url", "s1")
+        .select("id", "value").collect().map(_.toSeq).toSet == before)
+      // drop is journaled + idempotent; replay after drop stays clean
+      s2.dropSnapshot("url", "s1")
+      s2.dropSnapshot("url", "s1")
+      assert(s2.snapshots("url").isEmpty)
+      val s3 = new Storage(spark, dir)
+      assert(s3.snapshots("url").isEmpty)
+      intercept[IllegalArgumentException] { s3.readSnapshot("url", "s1") }
+    }
   }
 
   test("multi-table snapshot verb: one journal entry, consistent cut, replay-safe") {
-    val dir = Files.createTempDirectory("graft-snapmulti").toString
-    val s1 = new Storage(spark, dir)
-    s1.cache("q1", bundle20)
-    val urlBefore = s1.catalog.resolve("url")
-      .select("id", "value").collect().map(_.toSeq).toSet
-    val v4Before = s1.catalog.resolve("ipv4-addr")
-      .select("id", "value").collect().map(_.toSeq).toSet
-    s1.snapshot(Seq("ipv4-addr", "url"), "m1")
-    s1.cache("q2", bundle20b)
-    // both pins read the pre-churn cut through the shared name
-    assert(s1.readSnapshot("url", "m1")
-      .select("id", "value").collect().map(_.toSeq).toSet == urlBefore)
-    assert(s1.readSnapshot("ipv4-addr", "m1")
-      .select("id", "value").collect().map(_.toSeq).toSet == v4Before)
-    // ONE journal entry for the group, verb snapshot_multi
-    val journal = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "__symtable.jsonl")), "UTF-8")
-    assert(journal.contains("\"snapshot_multi\"") && journal.contains("\"m1\""))
-    assert(journal.linesIterator.count(_.contains("snapshot_multi")) == 1)
-    // replay records, never re-pins: a fresh Storage sees both members
-    val s2 = new Storage(spark, dir)
-    assert(s2.snapshots("url") == Seq("m1") && s2.snapshots("ipv4-addr") == Seq("m1"))
-    assert(s2.readSnapshot("url", "m1")
-      .select("id", "value").collect().map(_.toSeq).toSet == urlBefore)
-    // group re-pin under the taken name fails the whole group loudly
-    intercept[IllegalStateException] { s2.snapshot(Seq("ipv4-addr", "url"), "m1") }
+    withTempDir("graft-snapmulti") { dir =>
+      val s1 = new Storage(spark, dir)
+      s1.cache("q1", bundle20)
+      val urlBefore = s1.catalog.resolve("url")
+        .select("id", "value").collect().map(_.toSeq).toSet
+      val v4Before = s1.catalog.resolve("ipv4-addr")
+        .select("id", "value").collect().map(_.toSeq).toSet
+      s1.snapshot(Seq("ipv4-addr", "url"), "m1")
+      s1.cache("q2", bundle20b)
+      // both pins read the pre-churn cut through the shared name
+      assert(s1.readSnapshot("url", "m1")
+        .select("id", "value").collect().map(_.toSeq).toSet == urlBefore)
+      assert(s1.readSnapshot("ipv4-addr", "m1")
+        .select("id", "value").collect().map(_.toSeq).toSet == v4Before)
+      // ONE journal entry for the group, verb snapshot_multi
+      val journal = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "__symtable.jsonl")), "UTF-8")
+      assert(journal.contains("\"snapshot_multi\"") && journal.contains("\"m1\""))
+      assert(journal.linesIterator.count(_.contains("snapshot_multi")) == 1)
+      // replay records, never re-pins: a fresh Storage sees both members
+      val s2 = new Storage(spark, dir)
+      assert(s2.snapshots("url") == Seq("m1") && s2.snapshots("ipv4-addr") == Seq("m1"))
+      assert(s2.readSnapshot("url", "m1")
+        .select("id", "value").collect().map(_.toSeq).toSet == urlBefore)
+      // group re-pin under the taken name fails the whole group loudly
+      intercept[IllegalStateException] { s2.snapshot(Seq("ipv4-addr", "url"), "m1") }
+    }
   }
 
   test("assignQuery views persist via the Stage-ADT JSON codec; Column-bearing plans stay transient") {
     import graft.query._
-    val dir = Files.createTempDirectory("graft-aq").toString
-    val s1 = new Storage(spark, dir)
-    s1.cache("q1", bundle20)
-    s1.extract("ips", "ipv4-addr", "q1", "")
-    val q = GQuery.table(
-      "ips",
-      Filter(Seq(Comparison("value", "LIKE", RLit("10.%")))),
-      Projection(Seq(Col("value"))),
-      Order(Seq(OrderKey("value"))))
-    // codec round-trip is exact on the data-only ADT
-    assert(StageJson.fromJson(StageJson.toJson(q).get) == q)
-    s1.assignQuery("tens", q, "ipv4-addr")
-    s1.assignQuery(
-      "transient",
-      GQuery.table("ips", Aggregation(Seq(ExprAgg(
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)), "n")))),
-      "ipv4-addr")
-    val s2 = new Storage(spark, dir)
-    assert(s2.views().contains("tens"))
-    assert(s2.values("value", "tens") == Seq("10.0.0.1"))
-    assert(!s2.views().contains("transient")) // live Columns cannot replay
+    withTempDir("graft-aq") { dir =>
+      val s1 = new Storage(spark, dir)
+      s1.cache("q1", bundle20)
+      s1.extract("ips", "ipv4-addr", "q1", "")
+      val q = GQuery.table(
+        "ips",
+        Filter(Seq(Comparison("value", "LIKE", RLit("10.%")))),
+        Projection(Seq(Col("value"))),
+        Order(Seq(OrderKey("value"))))
+      // codec round-trip is exact on the data-only ADT
+      assert(StageJson.fromJson(StageJson.toJson(q).get) == q)
+      s1.assignQuery("tens", q, "ipv4-addr")
+      s1.assignQuery(
+        "transient",
+        GQuery.table("ips", Aggregation(Seq(ExprAgg(
+          org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)), "n")))),
+        "ipv4-addr")
+      val s2 = new Storage(spark, dir)
+      assert(s2.views().contains("tens"))
+      assert(s2.values("value", "tens") == Seq("10.0.0.1"))
+      assert(!s2.views().contains("transient")) // live Columns cannot replay
+    }
   }
 
   test("prop_metadata: known table, ref-path resolution, name heuristics") {
