@@ -256,63 +256,43 @@ class Storage(val spark: SparkSession, val workDir: String) {
   def cache(queryId: String, bundle: String): Unit = cache(queryId, Seq(bundle))
 
   /** Distributed ingest: a Dataset of bundle JSON documents is flattened
-    * INSIDE executors (Flatten is pure/serializable), re-encoded as
-    * canonical JSON rows, and schema-inferred per type by spark.read.json —
-    * the 100 TB path: no bundle ever passes through the driver. The driver
-    * only sees the (small) distinct type list and coordinates the per-type
-    * merge-upserts. */
+    * INSIDE executors (Flatten is pure/serializable) into (type, object
+    * JSON) rows, typed by one census aggregate and written with the same
+    * converter as [[cache]] ([[writeFlat]]) — the 100 TB path: no bundle
+    * ever passes through the driver, only the metadata-sized census. */
   def cacheBundles(queryId: String, bundles: org.apache.spark.sql.Dataset[String]): Unit = {
     import bundles.sparkSession.implicits._
-    val flat = bundles
-      .flatMap { b =>
-        val objs = Flatten.flattenBundle(b)
-        val main = objs.map { o =>
-          val rest = o - "type" - "spec_version"
-          (o("type").toString,
-            StixId.canonicalJson(rest.map { case (k, v) => StixMeta.shortenKey(k) -> v }))
-        }
-        // per-bundle collapse of column metadata (objects of a bundle share
-        // schema, ~|objects|-fold fewer __columns rows) with the SAME pick
-        // rule as every other dedup: a first-sighting set here could freeze
-        // a fallback 'str' before the downstream window sees the real dtype
-        main ++ StixMeta.columnRows(objs).map(m => ("__columns", StixId.canonicalJson(m)))
-      }
+    writeFlat(bundles.flatMap(b => Flatten.flattenBundle(b).map(Storage.objRow))
       .toDF("otype", "obj")
-      .localCheckpoint() // parse bundles once, not once per discovered type
-    writeTypedJsonRows(flat, queryId)
+      .localCheckpoint(), // parse bundles once, not once per discovered type
+      queryId)
   }
 
-  /** Write a distributed (otype, canonical-json) object stream: per-type
-    * schema inference + merge-upsert, plus __queries provenance. Shared by
-    * the distributed bundle and fast-translation ingest paths. */
-  private def writeTypedJsonRows(flat: DataFrame, queryId: String): Unit = {
+  /** Write the Dataset verbs' (otype, obj) object stream. One aggregate
+    * over it yields the census, and with it the type list; each type's rows
+    * are then built on the executors with the converter the driver verbs
+    * use ([[UpsertWriter.toRow]]), so every verb types a table alike. */
+  private def writeFlat(flat: DataFrame, queryId: String): Unit = {
     import spark.implicits._
-    val types = flat.select("otype").distinct().collect().map(_.getString(0))
-    types.foreach { t =>
-      val df = spark.read.json(flat.where(col("otype") === t).select("obj").as[String])
-      writeTable(t,
-        if (t != "__columns") df
-        else {
-          // executor-side dtype is computed per VALUE, so one column can
-          // emit conflicting rows (a transformer-failure fallback yields
-          // 'str' beside the good rows' 'int'): keep ONE row per (otype,
-          // path) — non-'str' preferred, then lexicographic — the same pick
-          // rule the driver path applies (StixMeta.dtypePreferred)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("otype", "path")
-            .orderBy(
-              when(col("dtype") === lit("str"), 1).otherwise(0),
-              col("dtype"), col("shortname"))
-          df.withColumn("__rn", org.apache.spark.sql.functions.row_number().over(w))
-            .where(col("__rn") === 1).drop("__rn")
-        })
+    val census = flat.as[(String, String)]
+      .flatMap { case (t, obj) =>
+        Storage.parseObj(obj).map { case (k, v) => (t, k, StixMeta.kindOf(v)) } }
+      .toDF("otype", "path", "kind")
+      .groupBy("otype", "path").agg(expr("bit_or(kind)"))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
+    census.groupBy(_._1._1).toSeq.sortBy(_._1).foreach { case (t, typeCensus) =>
+      val schema = Storage.schemaOf(typeCensus)
+      val rows = flat.where(col("otype") === t).select("obj").as[String].rdd
+        .map(obj => UpsertWriter.toRow(Storage.shortened(Storage.parseObj(obj)), schema))
+      writeTable(t, spark.createDataFrame(rows, schema))
     }
+    val meta = StixMeta.columnRows(census)
+    if (meta.nonEmpty) writeTable("__columns", UpsertWriter.rowsToDF(spark, meta))
     writeTable("__queries", flat
-      .where(!col("otype").isin("__contains", "__reflist", "__columns"))
-      .select(get_json_object(col("obj"), "$.id").as("sco_id"))
+      .where(!col("otype").isin("__contains", "__reflist"))
+      .select(lit(queryId).as("query_id"), get_json_object(col("obj"), "$.id").as("sco_id"))
       .where(col("sco_id").isNotNull)
-      .distinct()
-      .withColumn("query_id", lit(queryId)))
+      .distinct())
   }
 
   /** Write one batch into table `t` by the table's rule, then drop what
@@ -453,9 +433,10 @@ class Storage(val spark: SparkSession, val workDir: String) {
 
   /** Distributed fast translation — the 100 TB ingest path. Native event
     * JSON documents are parsed, translated, and exploded into typed objects
-    * INSIDE executors (Translate.translateRow is pure/serializable); the
-    * driver only sees the distinct native-column set (for constant-value
-    * mappings) and the small type list, exactly like cacheBundles. */
+    * INSIDE executors (Translate.translateRow is pure/serializable) and
+    * written like cacheBundles, identity row included; the driver only sees
+    * the distinct native-column set (for constant-value mappings) and the
+    * census. */
   def cacheTranslatedEvents(
       queryId: String,
       events: org.apache.spark.sql.Dataset[String],
@@ -473,37 +454,27 @@ class Storage(val spark: SparkSession, val workDir: String) {
     val present = events.flatMap(e => flatEvent(e).keys).distinct().collect().toSeq
     val valCols = Translate.constCols(stixMap, present)
     val createdNow = Translate.nowRfc3339()
-    val flat = events
-      .flatMap { e =>
-        val row = Translate.translateRow(
-          stixMap, Translate.builtinTransformers, flatEvent(e), identity, valCols, createdNow)
-        Translate.rowToObjects(row).flatMap { o =>
-          val t = o("type").toString
-          val objRow = (t, StixId.canonicalJson(
-            (o - "type").map { case (k, v) => StixMeta.shortenKey(k) -> v }))
-          // __columns metadata rows, as the driver-side path records; the
-          // (otype, path) window in writeTypedJsonRows dedups the fan-out
-          objRow +: StixMeta.columnRows(Seq(o)).map(m => ("__columns", StixId.canonicalJson(m)))
-        }
-      }
-      .toDF("otype", "obj")
-      .localCheckpoint() // translate events once, not once per discovered type
-    if (identity != null && identity.nonEmpty)
-      writeObjects(Seq(identity), queryId)
-    writeTypedJsonRows(flat, queryId)
+    val translated = events.flatMap { e =>
+      val row = Translate.translateRow(
+        stixMap, Translate.builtinTransformers, flatEvent(e), identity, valCols, createdNow)
+      Translate.rowToObjects(row).map(Storage.objRow)
+    }
+    // the data-source identity joins the batch ahead of the events, as in
+    // cacheTranslated
+    val ids = Option(identity).filter(_.nonEmpty).map(Storage.objRow).toSeq
+    writeFlat(ids.toDS().union(translated).toDF("otype", "obj")
+      .localCheckpoint(), // translate events once, not once per discovered type
+      queryId)
   }
 
+  /** Write driver-side objects: per type, a census types the table and
+    * records its `__columns` rows, as [[writeFlat]] does on the executors. */
   private def writeObjects(objs: Seq[Map[String, Any]], queryId: String): Unit = {
     val colMeta = Seq.newBuilder[Map[String, Any]]
     objs.groupBy(_("type").toString).foreach { case (t, rows) =>
-      // ONE __columns row per path, by the pick rule the distributed
-      // path's window dedup shares, so both ingest paths record identical
-      // metadata for identical data
-      colMeta ++= StixMeta.columnRows(rows)
-      // shorten long/extension column names at ingest (splitter.py:240-256);
-      // type and spec_version never become columns (splitter.py:240-241)
-      writeTable(t, UpsertWriter.rowsToDF(spark,
-        rows.map(r => (r - "type" - "spec_version").map { case (k, v) => StixMeta.shortenKey(k) -> v })))
+      val census = StixMeta.census(rows)
+      colMeta ++= StixMeta.columnRows(census)
+      writeTable(t, UpsertWriter.rowsToDF(spark, rows.map(Storage.shortened), Storage.schemaOf(census)))
     }
     val meta = colMeta.result()
     if (meta.nonEmpty) writeTable("__columns", UpsertWriter.rowsToDF(spark, meta))
@@ -1183,6 +1154,22 @@ class Storage(val spark: SparkSession, val workDir: String) {
 }
 
 object Storage {
+  /** One object as a Dataset-verb row: its type, and the rest as JSON
+    * (type and spec_version never become columns, splitter.py:240-241). */
+  private def objRow(o: Map[String, Any]): (String, String) =
+    (o("type").toString, StixId.canonicalJson(o - "type" - "spec_version"))
+
+  private def parseObj(json: String): Map[String, Any] =
+    Flatten.parseJson(json).asInstanceOf[Map[String, Any]]
+
+  /** Keys shortened to column names at ingest (splitter.py:240-256). */
+  private def shortened(o: Map[String, Any]): Map[String, Any] =
+    o.map { case (k, v) => StixMeta.shortenKey(k) -> v }
+
+  /** A table's schema from its census: paths shortened to columns. */
+  private def schemaOf(census: Map[(String, String), Int]): org.apache.spark.sql.types.StructType =
+    UpsertWriter.schemaOf(census.toSeq.groupMapReduce(e => StixMeta.shortenKey(e._1._2))(_._2)(_ | _))
+
   /** Source-table path census AND layout parameters (bucket count, key
     * column) under which each finish() bucketed layout was written, keyed by
     * (workDir tag, table) — lets a re-finish over an unchanged store with

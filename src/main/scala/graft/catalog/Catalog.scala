@@ -58,8 +58,11 @@ class Catalog(val spark: SparkSession, val dataDir: String) {
         baseCache.getOrElseUpdate(name, readBase(name))
     }
 
-  /** Parquet TIMESTAMP(NANOS) is read as raw long (nanosAsLong, set in the
-    * session builder — Spark has no nanosecond timestamp type); normalize to
+  /** A base table through the one stored-table reader
+    * ([[graft.ingest.UpsertWriter.readTable]]: rolls an interrupted publish
+    * forward, drops the bucket column, coalesces small stores). Parquet
+    * TIMESTAMP(NANOS) is read as raw long (nanosAsLong, set in the session
+    * builder — Spark has no nanosecond timestamp type); normalize to
     * TimestampType at the scan by integer-dividing to micros, matching how
     * nanos-aware engines truncate. Pure projection — stays in the scan's
     * codegen stage, no extra pass. */
@@ -69,26 +72,12 @@ class Catalog(val spark: SparkSession, val dataDir: String) {
     // cursor (sqlitestorage.py:169-171; tests/test_errors.py
     // test_empty_results). Schema is id-only: nothing downstream can know
     // more about a table that never existed.
-    if (!new java.io.File(s"$dataDir/$name.parquet").exists())
+    if (!graft.ingest.UpsertWriter.exists(dataDir, name))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types
           .StructField("id", org.apache.spark.sql.types.StringType))))
-    // .drop: bucketed stores carry a hidden __bucket partition column
-    // (UpsertWriter layout) that must never surface in query results.
-    // Scan shape is derived from input size (many-tiny-file bucketed
-    // stores otherwise cost one task per file — measured ~100 ms of pure
-    // per-task fixed cost each at fixture scale): a small multi-file
-    // store coalesces to ceil(bytes/16MB) read partitions; big or
-    // single-file tables are untouched, so splittable large scans keep
-    // their parallelism and their scan-level pushdown shape.
-    val raw = spark.read.parquet(s"$dataDir/$name.parquet").drop("__bucket")
-    val df = graft.ingest.FsUtil.smallDirStats(
-      java.nio.file.Paths.get(s"$dataDir/$name.parquet"), 256L * 1024 * 1024) match {
-      case Some((files, bytes)) if files > 4 =>
-        raw.coalesce(math.max(1, (bytes / (16L * 1024 * 1024)).toInt + 1))
-      case _ => raw
-    }
+    val df = graft.ingest.UpsertWriter.readTable(spark, dataDir, name)
     df.schema.fields.find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType) match {
       case Some(_) => df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
       case None    => df

@@ -8,6 +8,13 @@ import scala.jdk.CollectionConverters._
 
 /** Dynamic-schema DataFrame construction + the two write verbs onto Parquet.
   *
+  * One typing rule serves every ingest verb: a census of the value kinds
+  * seen per column ([[graft.model.StixMeta.census]]) gives each column its
+  * type ([[columnType]]), and one converter ([[toRow]]) builds the rows. The
+  * driver verbs take the census in the driver ([[rowsToDF]]); the Dataset
+  * verbs aggregate it on the executors and convert there, so a bundle
+  * stores the same schema whichever verb ingests it.
+  *
   * [[upsert]] (SCO tables; firepit/sqlstorage.py:367-380): per id,
   * first_observed = MIN, last_observed = MAX, number_observed = SUM, every
   * other column = newest non-null value (null never clobbers — reference
@@ -92,42 +99,57 @@ object UpsertWriter {
   /** The hidden hive-partition column carrying the bucket id. */
   private val BucketCol = "__bucket"
 
-  /** Infer a column type from observed values (firepit infer_type analogue,
-    * sqlstorage.py:89-104): Long/Double/Boolean kept native; primitive
-    * lists -> array<string>; dict/mixed lists -> JSON text (the reference
-    * stores ALL lists as JSON text; we keep arrays queryable). */
-  def rowsToDF(spark: SparkSession, rows: Seq[Map[String, Any]]): DataFrame = {
-    val cols = rows.flatMap(_.keys).distinct.sorted
-    def typeOf(values: Seq[Any]): DataType = {
-      val nn = values.filter(_ != null)
-      if (nn.isEmpty) StringType
-      else if (nn.forall(_.isInstanceOf[Boolean])) BooleanType
-      else if (nn.forall(_.isInstanceOf[Long])) LongType
-      else if (nn.forall(v => v.isInstanceOf[Long] || v.isInstanceOf[Double])) DoubleType
-      // collection.Seq, not immutable.Seq: Row.toSeq yields mutable
-      // ArraySeq for array columns (reassign round-trips)
-      else if (nn.forall(_.isInstanceOf[collection.Seq[_]])) {
-        if (nn.forall(_.asInstanceOf[collection.Seq[_]].forall(e =>
-            !e.isInstanceOf[collection.Map[_, _]] && !e.isInstanceOf[collection.Seq[_]])))
-          ArrayType(StringType)
-        else StringType // JSON-encoded (struct lists, e.g. registry values)
-      } else StringType
+  /** The column type for a set of value kinds ([[graft.model.StixMeta
+    * .kindOf]]; firepit infer_type analogue, sqlstorage.py:89-104):
+    * booleans, ints and numbers kept native (ints beside floats widen to
+    * double); scalar lists -> array<string>; nested lists, dicts and mixed
+    * kinds -> text, JSON for the containers (the reference stores ALL lists
+    * as JSON text; we keep scalar arrays queryable). No kind (only nulls
+    * seen) -> string. */
+  def columnType(kinds: Int): DataType = {
+    import graft.model.StixMeta.Kind
+    kinds match {
+      case Kind.Bool                                     => BooleanType
+      case Kind.Int                                      => LongType
+      case k if k != 0 && (k & ~(Kind.Int | Kind.Float)) == 0 => DoubleType
+      case Kind.ScalarList                               => ArrayType(StringType)
+      case _                                             => StringType
     }
-    val types = cols.map(c => c -> typeOf(rows.flatMap(_.get(c)))).toMap
-    val schema = StructType(cols.map(c => StructField(c, types(c), nullable = true)))
-    def conv(v: Any, t: DataType): Any = (v, t) match {
-      case (null, _)                  => null
-      case (x: Long, DoubleType)      => x.toDouble
-      case (x: collection.Seq[_], ArrayType(StringType, _)) =>
-        x.toSeq.map(e => if (e == null) null else e.toString)
-      case (x: collection.Seq[_], StringType) => graft.model.StixId.canonicalJson(x.toSeq)
-      case (x: collection.Map[_, _], StringType) => graft.model.StixId.canonicalJson(x)
-      case (x, StringType)            => x.toString
-      case (x, _)                     => x
-    }
-    val data = rows.map(r => Row.fromSeq(cols.map(c => conv(r.getOrElse(c, null), types(c)))))
-    spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
   }
+
+  /** The table schema for per-column kinds: columns sorted by name. */
+  def schemaOf(kinds: Map[String, Int]): StructType =
+    StructType(kinds.toSeq.sortBy(_._1).map { case (c, k) =>
+      StructField(c, columnType(k), nullable = true) })
+
+  /** One value converted to its column's type — the one converter every
+    * ingest verb builds rows with, on the driver or on the executors. */
+  private def cell(v: Any, t: DataType): Any = (v, t) match {
+    case (null, _)                  => null
+    case (x: Int, LongType)         => x.toLong
+    case (x: Long, DoubleType)      => x.toDouble
+    case (x: Int, DoubleType)       => x.toDouble
+    case (x: Float, DoubleType)     => x.toDouble
+    case (x: collection.Seq[_], ArrayType(StringType, _)) =>
+      x.toSeq.map(e => if (e == null) null else e.toString)
+    case (x: collection.Seq[_], StringType) => graft.model.StixId.canonicalJson(x.toSeq)
+    case (x: collection.Map[_, _], StringType) => graft.model.StixId.canonicalJson(x)
+    case (x, StringType)            => x.toString
+    case (x, _)                     => x
+  }
+
+  /** `r` as a row of `schema`; keys outside the schema are dropped. */
+  def toRow(r: collection.Map[String, Any], schema: StructType): Row =
+    Row.fromSeq(schema.fields.toSeq.map(f => cell(r.getOrElse(f.name, null), f.dataType)))
+
+  /** Driver-side rows as a one-partition DataFrame of `schema`. */
+  def rowsToDF(spark: SparkSession, rows: Seq[Map[String, Any]], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map(toRow(_, schema)), 1), schema)
+
+  /** Driver-side rows typed by their own kinds ([[columnType]]). */
+  def rowsToDF(spark: SparkSession, rows: Seq[Map[String, Any]]): DataFrame =
+    rowsToDF(spark, rows, schemaOf(rows.flatten.groupMapReduce(_._1)(kv =>
+      graft.model.StixMeta.kindOf(kv._2))(_ | _)))
 
   private[graft] def pathOf(dir: String, table: String): Path = Paths.get(dir, s"$table.parquet")
 
@@ -224,6 +246,10 @@ object UpsertWriter {
             .where(pred)
     }
   }
+
+  /** The rows of `buckets` only: a partition-pruned scan of table `p`. */
+  private def readBuckets(spark: SparkSession, p: Path, buckets: Seq[Int]): DataFrame =
+    spark.read.parquet(p.toString).where(col(BucketCol).isin(buckets: _*)).drop(BucketCol)
 
   /** First parquet data file under the table tree (any one — all buckets
     * share a single schema). Walks bucket dirs lazily and stops at the
@@ -730,11 +756,7 @@ object UpsertWriter {
   private def compactIfNeeded(
       spark: SparkSession, p: Path, keys: Seq[String], n: Int, candidates: Seq[Int]): Unit = {
     val over = candidates.filter(deltaFiles(p, _).exists(_ > DeltaFilesMax))
-    if (over.nonEmpty) {
-      val rows = spark.read.parquet(p.toString)
-        .where(col(BucketCol).isin(over: _*)).drop(BucketCol)
-      swapTouchedBuckets(rows, p, keys, n, over)
-    }
+    if (over.nonEmpty) swapTouchedBuckets(readBuckets(spark, p, over), p, keys, n, over)
   }
 
   /** Compact EVERY bucket carrying at least `minDeltaFiles` delta files
@@ -755,11 +777,7 @@ object UpsertWriter {
       (bucketCount(p), bucketKeys(p)) match {
         case (Some(n), Some(keys)) if Files.exists(p) =>
           val due = (0 until n).filter(deltaFiles(p, _).exists(_ >= minDeltaFiles))
-          if (due.nonEmpty) {
-            val rows = spark.read.parquet(p.toString)
-              .where(col(BucketCol).isin(due: _*)).drop(BucketCol)
-            swapTouchedBuckets(rows, p, keys, n, due)
-          }
+          if (due.nonEmpty) swapTouchedBuckets(readBuckets(spark, p, due), p, keys, n, due)
           due
         case _ => Nil // absent or legacy flat table: nothing bucket-shaped to compact
       }
@@ -990,9 +1008,7 @@ object UpsertWriter {
               .persist() // reused across several jobs; also pins a
                          // nondeterministic source so every job sees one batch
             try {
-              val old = spark.read.parquet(p.toString)
-                .where(col(BucketCol).isin(touchedBuckets(batch, t.keys, n): _*)) // pruned scan
-                .drop(BucketCol)
+              val old = readBuckets(spark, p, touchedBuckets(batch, t.keys, n))
               compactIfNeeded(spark, p, t.keys, n, step(t, batch, old))
             } finally batch.unpersist()
           case n => rewrite(evolve(stored), n.getOrElse(numBuckets))
@@ -1095,9 +1111,7 @@ object UpsertWriter {
         // rewrite buckets containing at least one genuine merge,
         // folding the batch's inserts for those buckets into the
         // same rewrite
-        val oldUpd = spark.read.parquet(p.toString)
-          .where(col(BucketCol).isin(updBuckets: _*)).drop(BucketCol)
-          .withColumn("__seq", lit(-1L))
+        val oldUpd = readBuckets(spark, p, updBuckets).withColumn("__seq", lit(-1L))
         val batchUpd = batch
           .where(bucketOf(keys, nb).isin(updBuckets: _*))
           .withColumn("__seq", lit(0L))
@@ -1121,9 +1135,9 @@ object UpsertWriter {
     /** The id (observed-data). */
     case object Id extends AppendKey(_ => Seq("id"), _.dropDuplicates("id"))
 
-    /** A given column tuple (`__columns`' (otype, path)). The caller cuts
-      * its batch to one row per tuple by the table's own pick rule
-      * ([[graft.model.StixMeta.dtypePreferred]]). */
+    /** A given column tuple (`__columns`' (otype, path)). The caller's
+      * batch holds one row per tuple already
+      * ([[graft.model.StixMeta.columnRows]]). */
     final case class Cols(keys: Seq[String]) extends AppendKey(_ => keys, identity)
 
     /** The whole row, as its name-sorted column set (edge and provenance

@@ -59,58 +59,74 @@ object StixMeta {
     if (k.length > 48) Uuid5(ColumnsNs, key).toString.replace("-", "") else k
   }
 
-  /** Value-class dtype names for __columns metadata, matching the
-    * reference's `value.__class__.__name__` vocabulary (splitter.py:255). */
-  def pyDtype(v: Any): String = v match {
-    case _: String               => "str"
-    case _: Long | _: Int        => "int"
-    case _: Double | _: Float    => "float"
-    case _: Boolean              => "bool"
-    case _: Seq[_]               => "list"
-    case _: collection.Map[_, _] => "dict"
-    case null                    => "NoneType"
-    case _                       => "str"
+  /** The kinds of value an ingested property can hold, as bit flags so a
+    * set of kinds is one Int (`|` unions, Spark's `bit_or` aggregates). A
+    * null value has no kind (0). */
+  object Kind {
+    val Bool = 1
+    val Int = 2
+    val Float = 4
+    val Str = 8
+    val ScalarList = 16
+    val NestedList = 32
+    val Dict = 64
   }
 
-  /** Pick rule for conflicting __columns dtypes of one (otype, path):
-    * non-'str' preferred (a transformer/parse fallback records the raw
-    * string beside the good rows' real dtype), then lexicographic — the
-    * ONE rule shared by the driver, bundle, and distributed-window dedups
-    * so every ingest path records identical metadata for identical data.
+  /** The kind of one property value. Lists are scalar lists when no
+    * element is itself a list or a dict; anything unrecognised is text.
+    * Lists match collection.Seq, not immutable.Seq: Row.toSeq yields a
+    * mutable ArraySeq for array columns (reassign round-trips). */
+  def kindOf(v: Any): Int = v match {
+    case null                       => 0
+    case _: Boolean                 => Kind.Bool
+    case _: Long | _: Int           => Kind.Int
+    case _: Double | _: Float       => Kind.Float
+    case s: collection.Seq[_] =>
+      if (s.exists(e => e.isInstanceOf[collection.Seq[_]] || e.isInstanceOf[collection.Map[_, _]]))
+        Kind.NestedList
+      else Kind.ScalarList
+    case _: collection.Map[_, _] => Kind.Dict
+    case _                          => Kind.Str
+  }
+
+  /** The ingest census of `objs`: per (type, path), the set of kinds seen
+    * there (0 when the path only ever held null). The type and
+    * spec_version keys never become columns and are not counted. Every
+    * ingest verb types its tables and records its `__columns` rows from a
+    * census; the Dataset verbs aggregate theirs on the executors. */
+  def census(objs: Iterable[Map[String, Any]]): Map[(String, String), Int] =
+    objs.flatMap { o =>
+      val t = o("type").toString
+      (o - "type" - "spec_version").map { case (k, v) => (t, k) -> kindOf(v) }
+    }.groupMapReduce(_._1)(_._2)(_ | _)
+
+  /** The reference's `value.__class__.__name__` for each kind
+    * (splitter.py:255). */
+  private val pyDtype = Map(Kind.Bool -> "bool", Kind.Int -> "int", Kind.Float -> "float",
+    Kind.Str -> "str", Kind.ScalarList -> "list", Kind.NestedList -> "list", Kind.Dict -> "dict")
+
+  /** The `__columns` rows a census records (ingest.py:640-656): one
+    * (otype, path, shortname, dtype) row per (type, path) seen with a
+    * non-null value, sorted by (type, path). Edge rows (`__` types) record
+    * nothing. Where a path held several kinds, the dtype is the first of
+    * theirs with non-'str' preferred (a transformer/parse fallback records
+    * the raw string beside the good rows' real dtype), then lexicographic:
+    * a total order, so the pick depends only on the set of kinds, never on
+    * which path, partition or verb saw a value first.
     *
-    * Batch-boundary caveat (intentional): the rule applies WITHIN one
+    * Batch-boundary caveat (intentional): the pick applies WITHIN one
     * ingest batch; across batches the first STORED sighting wins
     * (UpsertWriter.appendKeyed), matching the reference's record-once
     * contract — its new-column hook writes the dtype exactly once and never
     * revisits it (sqlstorage.py:187-189). A batch-1 fallback 'str'
     * therefore stays recorded even if batch 2 sees the real dtype, exactly
     * as upstream. */
-  def dtypePreferred(cand: String, incumbent: Option[String]): Boolean = incumbent match {
-    case None => true
-    case Some(c) =>
-      (c == "str" && cand != "str") || ((c == "str") == (cand == "str")) && cand < c
-  }
-
-  /** The `__columns` rows recorded for `objs` (ingest.py:640-656): one
-    * (otype, path, shortname, dtype) row per (type, path) seen with a
-    * non-null value, dtype picked by [[dtypePreferred]], sorted by (type,
-    * path). Edge rows (`__` types) and the type/spec_version keys, which
-    * never become columns, record nothing. */
-  def columnRows(objs: Iterable[Map[String, Any]]): Seq[Map[String, Any]] = {
-    val best = scala.collection.mutable.Map.empty[(String, String), String]
-    objs.foreach { o =>
-      val t = o("type").toString
-      if (!t.startsWith("__")) o.foreach { case (k, v) =>
-        if (k != "type" && k != "spec_version" && v != null) {
-          val d = pyDtype(v)
-          if (dtypePreferred(d, best.get((t, k)))) best((t, k)) = d
-        }
+  def columnRows(census: Map[(String, String), Int]): Seq[Map[String, Any]] =
+    census.toSeq.filter { case ((t, _), kinds) => kinds != 0 && !t.startsWith("__") }
+      .sortBy(_._1).map { case ((t, k), kinds) =>
+        val d = pyDtype.collect { case (b, d) if (kinds & b) != 0 => d }.minBy(d => (d == "str", d))
+        Map[String, Any]("otype" -> t, "path" -> k, "shortname" -> shortenKey(k), "dtype" -> d)
       }
-    }
-    best.toSeq.sortBy(_._1).map { case ((t, k), d) =>
-      Map[String, Any]("otype" -> t, "path" -> k, "shortname" -> shortenKey(k), "dtype" -> d)
-    }
-  }
 
   /** Last dotted/colon piece of a path (props.py:355-360). */
   def getLast(prop: String): String = {

@@ -64,4 +64,39 @@ class CatalogSpec extends SparkSpec {
     c.setAppData("v", """{"k":1}""")
     assert(c.getAppData("v").contains("""{"k":1}"""))
   }
+
+  test("a view's base reads roll an interrupted publish forward") {
+    import graft.ingest.{LocalTableFs, TableFs, UpsertWriter}
+    import java.nio.file.Path
+    def bundle(n: Int) =
+      s"""{"type":"bundle","id":"bundle--r","objects":[
+         |{"type":"observed-data","id":"observed-data--r$n",
+         | "first_observed":"2024-01-01T00:00:00.000Z","last_observed":"2024-01-01T00:00:00.000Z",
+         | "number_observed":1,"objects":{"0":{"type":"url","value":"http://r.test/$n"}}}]}""".stripMargin
+    class Crash extends RuntimeException("injected crash")
+    withTempDir("graft-catalog-repair") { dir =>
+      val s = new graft.api.Storage(spark, dir)
+      s.cache("q1", bundle(1))
+      s.extract("v", "url", "q2", "")
+      // die at the first file move into the live __queries table: the
+      // publish's intent marker is written, its staged files are not moved
+      val queries = java.nio.file.Paths.get(dir, "__queries.parquet")
+      UpsertWriter.fs = new TableFs {
+        def put(p: Path, c: Array[Byte]): Unit = LocalTableFs.put(p, c)
+        def createNew(p: Path, c: Array[Byte]): Unit = LocalTableFs.createNew(p, c)
+        def move(src: Path, dst: Path): Unit =
+          if (dst.startsWith(queries)) throw new Crash else LocalTableFs.move(src, dst)
+        def moveReplace(src: Path, dst: Path): Unit = LocalTableFs.moveReplace(src, dst)
+        def deleteIfExists(p: Path): Unit = LocalTableFs.deleteIfExists(p)
+        def deleteTree(p: Path): Unit = LocalTableFs.deleteTree(p)
+        def mkdirs(p: Path): Unit = LocalTableFs.mkdirs(p)
+        def copyTree(src: Path, dst: Path): Unit = LocalTableFs.copyTree(src, dst)
+      }
+      try intercept[Crash](s.cache("q2", bundle(2)))
+      finally UpsertWriter.fs = LocalTableFs
+      assert(java.nio.file.Files.exists(queries.resolve("_graft_pending")))
+      val reopened = new graft.api.Storage(spark, dir)
+      assert(reopened.lookup("v").map(_("value")) == Seq("http://r.test/2"))
+    }
+  }
 }

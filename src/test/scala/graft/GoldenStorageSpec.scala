@@ -305,21 +305,9 @@ class GoldenStorageSpec extends SparkSpec {
     // census matches, so no warehouse file may be touched AND no Spark job
     // may run (the skip is driver-side metadata: NIO census walk + catalog
     // probe + view re-registration)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val s2 = new Storage(spark, s.workDir)
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      s2.finish()
-      Thread.sleep(1000L) // listener bus is async; drain before reading
-    } finally spark.sparkContext.removeSparkListener(counter)
-    assert(jobs.get() == 0,
-      s"finish() over an unchanged store ran ${jobs.get()} Spark jobs (expected 0)")
+    val (_, jobs) = countJobs(s2.finish())
+    assert(jobs == 0, s"finish() over an unchanged store ran $jobs Spark jobs (expected 0)")
     assert(warehouseFiles() == before,
       "finish() over an unchanged store rewrote the bucketed layout")
     // queries still answer through the re-registered layout

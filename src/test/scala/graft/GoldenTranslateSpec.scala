@@ -342,15 +342,22 @@ class GoldenTranslateSpec extends SparkSpec {
 
   test("cacheTranslatedEvents: distributed path matches the driver-side path") {
     import spark.implicits._
+    // the builtin transformers on both sides (executors know no others),
+    // plus a mapped list of ints
+    val map = stixMapJson.replace("\"hostname\":",
+      "\"ports\": {\"key\": \"network-traffic.x_ports\", \"object\": \"nt\"},\n \"hostname\":")
+    val evs = eventsJson.updated(0, eventsJson.head.replace("\"qid\"", "\"ports\": [80, 443], \"qid\""))
+    val driver = new Storage(spark, suiteTempDir("graft-xlate-drv"))
+    driver.cacheTranslated("qd", Translate.translate(
+      Flatten.parseJson(map).asInstanceOf[Map[String, Any]], Map.empty,
+      evs.map(Flatten.parseJson(_).asInstanceOf[Map[String, Any]]), dataSource), dataSource)
     val s = new Storage(spark, suiteTempDir("graft-xlate-dist"))
-    // builtinTransformers only on executors: strip events that need the
-    // test-local ToLowercaseArray/ValueToList to keep parity simple
-    val evs = eventsJson.take(2).map(_.replaceAll("\\s*\"protocol\": \"TCP\",", "")
-      .replaceAll("""\s*"application": \{"type": "ssh"\},""", "")).toDS().repartition(2)
-    s.cacheTranslatedEvents("qd", evs, stixMapJson.replaceAll("(?s)\\s*\"protocol\":[^}]*},", ""),
+    s.cacheTranslatedEvents("qd", evs.toDS().repartition(2), map,
       graft.model.StixId.canonicalJson(dataSource))
-    assert(s.count("ipv4-addr") == 4)
-    assert(s.count("observed-data") == 2)
-    assert(s.count("x-oca-asset") == 2)
+    assertSameShape(driver, s)
+    assert(s.schema("network-traffic").toMap.apply("x_ports") == "array<string>")
+    Seq("ipv4-addr" -> 4L, "observed-data" -> 3L, "x-oca-asset" -> 2L).foreach { case (t, n) =>
+      assert(s.count(t) == n && driver.count(t) == n, s"table $t")
+    }
   }
 }

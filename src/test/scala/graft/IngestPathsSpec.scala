@@ -19,20 +19,76 @@ class IngestPathsSpec extends SparkSpec {
        | "objects":{"0":{"type":"ipv4-addr","value":"$ip"},
        |            "1":{"type":"url","value":"$url"}}}]}""".stripMargin
 
+  private def fixture(name: String): String =
+    new String(Files.readAllBytes(java.nio.file.Paths.get(s"src/test/resources/fixtures/$name")), "UTF-8")
+
+  /** Ingest `bundles` once by `cache` and once by `cacheBundles`, each into
+    * an empty store; returns both stores and the jobs each verb launched. */
+  private def bothPaths(bundles: Seq[String]): ((Storage, Int), (Storage, Int)) = {
+    val (driver, dataset) = (tmpStore(), tmpStore())
+    val ds = bundles.toDS().repartition(bundles.size)
+    ((driver, countJobs(driver.cache("q1", bundles))._2),
+      (dataset, countJobs(dataset.cacheBundles("q1", ds))._2))
+  }
+
   test("cacheBundles: executor-side flatten, same tables as driver cache") {
-    val s = tmpStore()
-    val bundles = Seq(
+    val ((d, _), (s, _)) = bothPaths(Seq(
       mkBundle("10.0.0.1", "http://a.test/1"),
       mkBundle("10.0.0.2", "http://a.test/2"),
-      mkBundle("10.0.0.1", "http://a.test/3") // dup ip across bundles
-    ).toDS().repartition(3)
-    s.cacheBundles("q1", bundles)
+      mkBundle("10.0.0.1", "http://a.test/3"))) // dup ip across bundles
+    assertSameShape(d, s)
     assert(s.count("ipv4-addr") == 2) // deterministic-id dedup held
     assert(s.count("url") == 3)
     s.extract("u", "url", "q1", "[url:value LIKE '%a.test%']")
     assert(s.count("u") == 3)
     // provenance recorded for the distributed path too
     assert(s.catalog.resolve("__queries").where($"query_id" === "q1").count() >= 5)
+  }
+
+  private lazy val regkey = bothPaths(Seq(fixture("regkey-example.json")))
+
+  test("cache and cacheBundles store regkey-example alike; lists of dicts are JSON text") {
+    val ((d, _), (s, _)) = regkey
+    assertSameShape(d, s)
+    assert(s.schema("windows-registry-key").toMap.apply("values") == "string")
+    // registry keys get random ids (no id-contributing property)
+    def rows(st: Storage) = st.lookup("windows-registry-key").map(_ - "id")
+    assert(rows(d) == rows(s))
+    assert(rows(s).map(_("values")) == Seq("""[{"name":"WindowsDefender"}]"""))
+  }
+
+  test("cacheBundles of regkey-example launches at most 4 more jobs than cache") {
+    val ((_, driverJobs), (_, datasetJobs)) = regkey
+    assert(datasetJobs <= driverJobs + 4, s"cacheBundles $datasetJobs jobs, cache $driverJobs")
+  }
+
+  test("cache and cacheBundles store test_bundle_2 and mixed-kind columns alike") {
+    def sw(name: String, mixed: String) =
+      s"""{"type":"software","name":"$name","x_ints":[1,2,3],"x_mixed":$mixed,"x_none":null}"""
+    val mixedKinds =
+      s"""{"type":"bundle","id":"bundle--k","objects":[
+         |{"type":"observed-data","id":"observed-data--k1",
+         | "first_observed":"2024-01-01T00:00:00.000Z","last_observed":"2024-01-01T00:00:00.000Z",
+         | "number_observed":1,
+         | "objects":{"0":${sw("a", "7")},"1":${sw("b", "\"seven\"")}}}]}""".stripMargin
+    val ((d, _), (s, _)) = bothPaths(Seq(fixture("test_bundle_2.json"), mixedKinds))
+    assertSameShape(d, s)
+    val types = s.schema("software").toMap
+    assert(types("x_ints") == "array<string>")
+    assert(types("x_mixed") == "string")
+    assert(types("x_none") == "string")
+    val dtypes = s.columnsMetadata("software").map(m => m("path") -> m("dtype")).toMap
+    assert(dtypes.get("x_ints").contains("list") && dtypes.get("x_mixed").contains("int"))
+    assert(!dtypes.contains("x_none")) // a path only ever null records no dtype
+  }
+
+  test("one store fed by cache and then by cacheBundles keeps one schema") {
+    val ((s, _), _) = regkey // the store `cache` built above, fed again by cacheBundles
+    val before = storeShape(s)
+    s.cacheBundles("q2", Seq(fixture("regkey-example.json")).toDS())
+    assert(storeShape(s) == before)
+    s.extract("k", "windows-registry-key", "q2", "")
+    assert(s.lookup("k").map(_("values")) == Seq("""[{"name":"WindowsDefender"}]"""))
   }
 
   test("SysmonMapper: process-creation and network events -> SCO graph") {

@@ -2804,20 +2804,6 @@ class PipelineOpsSpec extends SparkSpec {
         .collect()
       rows.count(r => (r.getDouble(2) >= 0.5) == (r.getInt(3) == 1)).toDouble / rows.length
     }
-    def countJobs[T](body: => T): (T, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(counter)
-      val out =
-        try { val r = body; Thread.sleep(1000L); r } // listener bus is async
-        finally spark.sparkContext.removeSparkListener(counter)
-      (out, jobs.get())
-    }
     // the production hyperparameters on both sides (lrModelFor's epoch=30
     // config vs the Newton default)
     val (mEpoch, jobsEpoch) = countJobs(

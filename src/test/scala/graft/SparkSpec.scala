@@ -27,6 +27,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.createTempDirectory(suiteRoot, prefix).toString
   }
 
+  /** `body`'s result and the number of Spark jobs it launched. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    val out =
+      try { val r = body; Thread.sleep(1000L); r } // listener bus is async; drain it
+      finally spark.sparkContext.removeSparkListener(counter)
+    (out, jobs.get())
+  }
+
+  /** What two ingest verbs must agree on for the same objects: every
+    * stored table's schema as (column, type) pairs, and the `__columns`
+    * rows, sorted. */
+  def storeShape(s: graft.api.Storage): (Map[String, Seq[(String, String)]], Seq[String]) = {
+    val schemas = graft.ingest.UpsertWriter.tables(s.workDir).map(t =>
+      t -> s.catalog.resolve(t).schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString)).toMap
+    val columns = s.catalog.resolve("__columns").collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    (schemas, columns)
+  }
+
+  def assertSameShape(a: graft.api.Storage, b: graft.api.Storage): Unit = {
+    val ((schemasA, columnsA), (schemasB, columnsB)) = (storeShape(a), storeShape(b))
+    assert(schemasA.keySet == schemasB.keySet)
+    schemasA.keys.foreach(t => assert(schemasA(t) == schemasB(t), s"table $t"))
+    assert(columnsA == columnsB)
+  }
+
   override def afterAll(): Unit =
     try super.afterAll()
     finally synchronized {
