@@ -763,9 +763,9 @@ object StixQueries {
         .orderBy("id")
     },
 
-    // ----- finish(): the post-ingest bucketed layout — results read
-    //       THROUGH the re-registered bucketed warehouse tables must equal
-    //       the parquet ground truth the oracle reads (sqlstorage.py:
+    // ----- finish(): the post-ingest layout hook — results read
+    //       THROUGH the store's own bucketed relations must equal the
+    //       parquet ground truth the oracle reads (sqlstorage.py:
     //       824-827's deferred-index hook; co-location audited by
     //       LayoutSpec, correctness pinned here).
     // ----- snapshot(): the reproducibility verb on the API surface —

@@ -300,83 +300,33 @@ class Storage(val spark: SparkSession, val workDir: String) {
     * chosen. SCO tables merge-upsert by id (sqlstorage.py:367-408); the
     * rest keep the first sighting of a key (INSERT ... ON CONFLICT DO
     * NOTHING, sqlstorage.py:389-392): observed-data by id, `__columns` by
-    * (otype, path), the edge and provenance tables by the whole row. */
+    * (otype, path), the edge and provenance tables by the whole row. The
+    * edge tables route on the SCO side's join key (`__contains` on
+    * target_ref, `__reflist` on source_ref), so the observation joins read
+    * the store's buckets without a shuffle ([[finish]]). */
   private def writeTable(t: String, df: DataFrame): Unit = {
+    def append(k: AppendKey): Unit = UpsertWriter.appendKeyed(spark, workDir, t, df, k)
     t match {
-      case "observed-data" => UpsertWriter.appendKeyed(spark, workDir, t, df, AppendKey.Id)
-      case "__columns" =>
-        UpsertWriter.appendKeyed(spark, workDir, t, df, AppendKey.Cols(Seq("otype", "path")))
-      case "__contains" | "__reflist" | "__queries" =>
-        UpsertWriter.appendKeyed(spark, workDir, t, df, AppendKey.Row)
-      case _ => UpsertWriter.upsert(spark, workDir, t, df)
+      case "observed-data" => append(AppendKey.Id)
+      case "__columns"     => append(AppendKey.Cols(Seq("otype", "path")))
+      case "__contains"    => append(AppendKey.RowOn("target_ref"))
+      case "__reflist"     => append(AppendKey.RowOn("source_ref"))
+      case "__queries"     => append(AppendKey.Row)
+      case _               => UpsertWriter.upsert(spark, workDir, t, df)
     }
     catalog.invalidateBase(t)
-    dropFinish(t)
   }
 
-  // ----- finish: post-ingest layout (sqlstorage.py:824-827) ---------------
-
-  private val finishViews = scala.collection.mutable.Map.empty[String, AnyRef]
-
-  /** Post-ingest layout hook. The reference builds its deferred B-tree
-    * indexes on the edge tables here (sqlstorage.py:824-827,
-    * pgstorage.py:487-501); the Spark layout primitive in the index's role
-    * is bucketing: re-write each table bucketed+sorted by its join key so
-    * subsequent observation joins are co-located — the bucketed sides join
-    * with NO shuffle exchange. __contains buckets on target_ref (the
-    * SCO-side join key), __reflist on source_ref, observed-data and every
-    * SCO table on id. Later ingest into a table drops its bucketed layout
-    * (copy-on-write, like every other table rewrite here). */
-  /** Collision-resistant per-workDir prefix for finish()'s bucketed tables
-    * (String.hashCode collides across workDirs in one session and would
-    * cross-clobber layouts). */
-  private lazy val dirTag: String = java.security.MessageDigest.getInstance("MD5")
-    .digest(new java.io.File(workDir).getAbsolutePath.getBytes("UTF-8"))
-    .take(6).map("%02x".format(_)).mkString
-
-  def finish(buckets: Int = 8): Unit = {
-    val keyed =
-      Seq("__contains" -> "target_ref", "__reflist" -> "source_ref", "observed-data" -> "id") ++
-        types().map(_ -> "id")
-    keyed.foreach { case (t, key) =>
-      if (UpsertWriter.exists(workDir, t) && !catalog.contains(t)) {
-        val tbl = s"graft_f${dirTag}_${t.replaceAll("[^A-Za-z0-9_]", "_")}"
-        // Idempotent re-finish: the bucketed copy is keyed by the source
-        // table's path census (file rewrites/appends/deletes all change
-        // it — publishes always mint fresh file names). A finish() over an
-        // unchanged store re-registers the existing layout instead of
-        // re-bucketing the warehouse — O(tables) metadata, zero jobs —
-        // which is also what a 100 TB re-run of an ingest pipeline's
-        // trailing finish() step must do. Mirrors the reference, where a
-        // repeated finish()'s CREATE INDEX lands on DuplicateTable/
-        // DuplicateObject and is swallowed (firepit/pgstorage.py:487-501,
-        // 254-259) — re-finish is a no-op there too.
-        val census = graft.operators.Layout.dirCensus(
-          UpsertWriter.pathOf(workDir, t).toString)
-        // The skip key folds in the layout PARAMETERS (bucket count + key
-        // column) alongside the data census: finish(buckets=16) after
-        // finish(buckets=8) over an unchanged store must re-bucket, not
-        // silently re-register the stale 8-bucket layout.
-        val stamp = (census, buckets, key)
-        val unchanged = Storage.finishCensus.get((dirTag, t)).contains(stamp) &&
-          spark.catalog.tableExists(s"`$tbl`")
-        if (!unchanged) {
-          graft.operators.Layout.writeBucketed(catalog.resolve(t), tbl, key, buckets)
-          Storage.finishCensus((dirTag, t)) = stamp
-        }
-        catalog.registerDF(t, spark.table(tbl), if (t.startsWith("__")) "" else t)
-        finishViews(t) = catalog.viewDefRef(t).get
-      }
-    }
-  }
-
-  /** Invalidate a finish() layout registration after new data lands in `t`
-    * (only if the name still holds OUR registration, not a user view). */
-  private def dropFinish(t: String): Unit =
-    if (finishViews.get(t).exists(ref => catalog.viewDefRef(t).exists(_ eq ref))) {
-      catalog.removeView(t)
-      finishViews.remove(t)
-    }
+  /** Post-ingest layout hook, a no-op here. The reference builds its
+    * deferred B-tree indexes on the edge tables at this point
+    * (sqlstorage.py:824-827, pgstorage.py:487-501). This store needs no
+    * such step: every table is written as a Spark bucketed layout on its
+    * join key as it is cached (`id` for SCO and observed-data tables,
+    * target_ref for `__contains`, source_ref for `__reflist`), and read
+    * back as a bucketed relation ([[UpsertWriter.readTable]]), so the
+    * observation joins plan without a shuffle before any finish(), and
+    * again after a reopen. Kept for API parity. */
+  def finish(): Unit = ()
 
   /** Import scalar values as SCOs of `scoType` via its primary property
     * (reference load() accepts plain strings, sqlstorage.py:485-489). */
@@ -810,22 +760,13 @@ class Storage(val spark: SparkSession, val workDir: String) {
   /** All table names: parquet datasets + materialized reassign results
     * (the reference's sqlite tables, sqlitestorage.py:268-274). */
   def tables(): Seq[String] =
-    // the '__' filter applies to BOTH sources: finish() re-registers the
-    // edge tables via registerDF, which would otherwise surface
-    // __contains/__reflist through materializedNames
     (UpsertWriter.tables(workDir) ++ catalog.materializedNames)
       .filterNot(_.startsWith("__")).distinct
 
   /** Table names that are SCO types = tables minus symbol-table names
     * (sqlitestorage.py:276-285); identity and observed-data are types. */
   def types(): Seq[String] =
-    UpsertWriter.tables(workDir)
-      .filterNot(t => t.startsWith("__") ||
-        // a finish() layout registration shadows the type's name in the
-        // catalog but the name is still a TYPE, not a user view — hiding it
-        // would silently disable auto-deref after finish()
-        (catalog.contains(t) &&
-          !finishViews.get(t).exists(ref => catalog.viewDefRef(t).exists(_ eq ref))))
+    UpsertWriter.tables(workDir).filterNot(t => t.startsWith("__") || catalog.contains(t))
   def views(): Seq[String] = catalog.viewNames
   def tableType(viewname: String): Option[String] = catalog.viewType(viewname)
   def columns(name: String): Seq[String] = resolve(name).columns.toSeq
@@ -851,18 +792,11 @@ class Storage(val spark: SparkSession, val workDir: String) {
 
   def removeView(name: String): Unit = { catalog.removeView(name); journal("remove", name) }
 
-  /** Delete ALL data in this store — tables, journal, views, AND the
-    * bucketed warehouse copies finish() wrote via saveAsTable (without the
-    * DROPs, full data copies would survive on disk and stay queryable in
-    * the Spark catalog after delete(); sqlitestorage.py:323-329 removes
-    * the db file). */
+  /** Delete ALL data in this store — tables, journal and views
+    * (sqlitestorage.py:323-329 removes the db file). */
   def delete(): Unit = {
     catalog.viewNames.toList.foreach(catalog.removeView)
     UpsertWriter.tables(workDir).foreach(catalog.invalidateBase)
-    finishViews.clear()
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(s"graft_f${dirTag}_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     val p = java.nio.file.Paths.get(workDir)
     if (java.nio.file.Files.exists(p)) {
       // shared leak-free recursive delete (graft.ingest.FsUtil)
@@ -1169,14 +1103,4 @@ object Storage {
   /** A table's schema from its census: paths shortened to columns. */
   private def schemaOf(census: Map[(String, String), Int]): org.apache.spark.sql.types.StructType =
     UpsertWriter.schemaOf(census.toSeq.groupMapReduce(e => StixMeta.shortenKey(e._1._2))(_._2)(_ | _))
-
-  /** Source-table path census AND layout parameters (bucket count, key
-    * column) under which each finish() bucketed layout was written, keyed by
-    * (workDir tag, table) — lets a re-finish over an unchanged store with
-    * unchanged parameters skip the warehouse rewrite, while a parameter
-    * change (e.g. buckets 8→16) forces a re-bucket. JVM-scoped like the
-    * Spark catalog entries it guards (a fresh JVM re-buckets and re-seeds). */
-  private[api] val finishCensus =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String), ((Long, Long), Int, String)]
 }

@@ -149,10 +149,6 @@ class Catalog(val spark: SparkSession, val dataDir: String) {
   def baseExists(name: String): Boolean =
     new java.io.File(s"$dataDir/$name.parquet").exists()
 
-  /** Identity of the current definition of a name (Storage.finish uses it
-    * to tell its own layout registrations from user views). */
-  private[graft] def viewDefRef(name: String): Option[AnyRef] = views.get(name)
-
   /** Snapshot of a name's CURRENT recipe (alias-resolved) — merge() inlines
     * its inputs' definitions at merge time like the reference's
     * _get_view_def expansion (sqlstorage.py:777-793), so the merged view

@@ -41,11 +41,32 @@ import scala.jdk.CollectionConverters._
   * and the merge REWRITES ONLY THE BUCKETS THAT RECEIVED ROWS — the
   * row-level ON CONFLICT economics of the reference (sqlstorage.py:382-408)
   * at file granularity: a trickle of bundles into a 100 TB store rewrites
-  * O(batch) buckets, not the table. Bucket keys are chosen so that all rows
-  * that can merge/dedup against each other share a bucket: `id` for
-  * upserts, and for keyed appends their key — the id, the key tuple, or
-  * the full (sorted) column set — so per-bucket merge is exactly global
-  * merge.
+  * O(batch) buckets, not the table. Bucket (routing) keys are chosen so
+  * that all rows that can merge/dedup against each other share a bucket,
+  * so per-bucket merge is exactly global merge. They are a subset of the
+  * merge/dedup key ([[AppendKey]]):
+  *  - SCO tables (upsert) and observed-data: `id`;
+  *  - `__columns`: (otype, path);
+  *  - `__contains`: `target_ref`, and `__reflist`: `source_ref` — the join
+  *    keys of the SCO side ([[AppendKey.RowOn]]);
+  *  - `__queries` and other whole-row tables: the full (sorted) column set.
+  * The keys are recorded in the marker when the table is created, and every
+  * incremental write routes by the RECORDED keys, never by the current
+  * rule: a table created under an older rule keeps its own routing.
+  *
+  * == The store is its own join layout ==
+  *
+  * K is Spark's own bucket id (pmod(murmur3, N)), and every file a publish
+  * moves into the live tree carries Spark's bucket-id suffix, the way
+  * Spark's bucketed writer names its files (`…_0000K.c000.snappy.parquet`,
+  * `delta-…_0000K.parquet`, matching its `__bucket=K` dir). A marker
+  * written so ends with the [[SparkBucketsLine]], and [[readTable]] then
+  * reads the table as a bucketed relation on its routing keys: a join or
+  * an aggregate on those keys plans without a shuffle straight off the
+  * store, with no second copy of the data and no catalog table. Spark
+  * turns the bucketed scan off where no operator needs it, so a plain
+  * scan keeps its file-split parallelism. A marker without that line (a
+  * table created before the layout) reads plainly.
   *
   * All buckets of a table always share ONE schema (column set, types, and
   * order): a batch whose union schema differs from the stored schema
@@ -151,7 +172,7 @@ object UpsertWriter {
     rowsToDF(spark, rows, schemaOf(rows.flatten.groupMapReduce(_._1)(kv =>
       graft.model.StixMeta.kindOf(kv._2))(_ | _)))
 
-  private[graft] def pathOf(dir: String, table: String): Path = Paths.get(dir, s"$table.parquet")
+  private def pathOf(dir: String, table: String): Path = Paths.get(dir, s"$table.parquet")
 
   def exists(dir: String, table: String): Boolean = {
     // a crashed whole-dir swap can leave the table existing only as its
@@ -175,11 +196,17 @@ object UpsertWriter {
   /** Read a stored table WITHOUT the bucketing partition column — the one
     * read entry point callers should use (flat legacy dirs read
     * identically: drop of an absent column is a no-op). Finishes any
-    * interrupted publish first (one cheap local Files.exists probe). */
+    * interrupted publish first (one cheap local Files.exists probe). A
+    * table whose marker records Spark-named bucket files reads as a
+    * bucketed relation on its routing keys ([[bucketedOn]]). */
   def readTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     repairPending(pathOf(dir, table))
     val p = pathOf(dir, table)
-    val raw = spark.read.parquet(p.toString).drop(BucketCol)
+    val plain = spark.read.parquet(p.toString)
+    val raw = (markerOf(p) match {
+      case Some(m) if m.sparkBuckets => bucketedOn(plain, m)
+      case _                         => plain
+    }).drop(BucketCol)
     // scan shape derived from input size: a small many-file bucketed store
     // coalesces to ceil(bytes/16MB) read partitions (one task per tiny file
     // is pure fixed cost — measured ~100 ms each); big stores untouched so
@@ -228,11 +255,8 @@ object UpsertWriter {
     }
     val keyLits = keys.map(k => lit(k).cast(idType))
     val pred = keyLits.map(col(s"`$keyCol`") === _).reduce(_ || _)
-    (bucketCount(p), bucketKeys(p)) match {
-      case (None, _) => readTable(spark, dir, table).where(pred)
-      case (Some(_), bk) if !bk.contains(Seq(keyCol)) =>
-        readTable(spark, dir, table).where(pred)
-      case (Some(n), _) =>
+    markerOf(p) match {
+      case Some(Marker(n, routing, _)) if routing == Seq(keyCol) =>
         import spark.implicits._
         val buckets = keys.toDF(keyCol)
           .select(pmod(hash(col(s"`$keyCol`").cast(idType)), lit(n)).as("b"))
@@ -244,6 +268,7 @@ object UpsertWriter {
           spark.read.option("basePath", p.toString).parquet(dirs.toIndexedSeq: _*)
             .drop(BucketCol)
             .where(pred)
+      case _ => readTable(spark, dir, table).where(pred)
     }
   }
 
@@ -264,37 +289,91 @@ object UpsertWriter {
 
   // ----- bucket layout bookkeeping ----------------------------------------
 
-  private def markerOf(p: Path): Path = p.resolve("_graft_buckets")
+  private def markerPath(p: Path): Path = p.resolve("_graft_buckets")
+
+  /** The last marker line of a table whose files all carry Spark's
+    * bucket-id suffix (see the header): it may be read as a bucketed
+    * relation. */
+  private val SparkBucketsLine = "@spark-bucket-files"
 
   /** Marker body: bucket count on line 1, then ONE ROUTING KEY COLUMN PER
-    * LINE — the catalog of how rows were hashed into buckets. Readers that
-    * prune by key ([[readForKeys]]) validate their probe column against
-    * these lines; a marker written before keys were recorded (count-only)
-    * reads as keys-unknown and pruning falls back to the full filtered
-    * read rather than guessing. */
+    * LINE — the catalog of how rows were hashed into buckets — then the
+    * [[SparkBucketsLine]]. */
   private def markerContent(n: Int, keys: Seq[String]): Array[Byte] =
-    (n.toString +: keys).mkString("", "\n", "\n").getBytes("UTF-8")
+    ((n.toString +: keys) :+ SparkBucketsLine).mkString("", "\n", "\n").getBytes("UTF-8")
 
-  private def markerLines(p: Path): Option[Seq[String]] =
-    if (!Files.exists(markerOf(p))) None
-    else
-      try Some(new String(Files.readAllBytes(markerOf(p)), "UTF-8")
-        .split('\n').map(_.trim).filter(_.nonEmpty).toSeq)
-      catch { case _: Exception => None }
+  /** A table's recorded layout: bucket count, routing keys, and whether
+    * its files carry Spark's bucket suffix. Older markers read as keys
+    * empty (count-only: key-pruned reads fall back to the full filtered
+    * read, and the next write rewrites the table) or without the suffix
+    * (plain reads). */
+  private final case class Marker(n: Int, keys: Seq[String], sparkBuckets: Boolean)
 
-  /** Bucket count of a stored table; None for a legacy flat directory
-    * (its next write migrates it to the bucketed layout). */
-  private def bucketCount(p: Path): Option[Int] =
-    markerLines(p).flatMap(_.headOption).flatMap(_.toIntOption)
-
-  /** The routing key columns recorded at table creation; None when the
-    * marker predates key recording (then only whole-table reads are safe
-    * to prune-free, and key-pruned reads must fall back). */
-  private def bucketKeys(p: Path): Option[Seq[String]] =
-    markerLines(p).map(_.drop(1)).filter(_.nonEmpty)
+  /** The marker of a stored table; None for a legacy flat directory (its
+    * next write migrates it to the bucketed layout). */
+  private def markerOf(p: Path): Option[Marker] =
+    if (!Files.exists(markerPath(p))) None
+    else {
+      val lines =
+        try new String(Files.readAllBytes(markerPath(p)), "UTF-8")
+          .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
+        catch { case _: Exception => Nil }
+      lines.headOption.flatMap(_.toIntOption).map { n =>
+        val tagged = lines.last == SparkBucketsLine
+        Marker(n, lines.slice(1, lines.size - (if (tagged) 1 else 0)), tagged)
+      }
+    }
 
   private def bucketOf(keys: Seq[String], n: Int): Column =
     pmod(hash(keys.map(k => col(s"`$k`")): _*), lit(n))
+
+  /** `plain`, a read of a table whose files all carry their bucket
+    * suffix, as a bucketed relation on its routing keys: the same scan
+    * with the table's bucket spec, built from the plain read's own
+    * relation (no catalog table, no extra job). */
+  private def bucketedOn(plain: DataFrame, m: Marker): DataFrame = {
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    plain.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation } match {
+      case Some(r: HadoopFsRelation) =>
+        plain.sparkSession.baseRelationToDataFrame(
+          r.copy(bucketSpec = Some(BucketSpec(m.n, m.keys, Nil)))(r.sparkSession))
+      case _ => plain
+    }
+  }
+
+  /** `name` with bucket `k`'s suffix inserted where Spark's bucketed
+    * writer puts it, before the first dot (`part-…_00003.c000.snappy
+    * .parquet`), so `BucketingUtils.getBucketId` reads `k` back. */
+  private def bucketFileName(name: String, k: Int): String = {
+    val dot = name.indexOf('.') match { case -1 => name.length; case i => i }
+    f"${name.take(dot)}_$k%05d${name.drop(dot)}"
+  }
+
+  /** The bucket id of a `__bucket=K` directory. */
+  private def bucketIdOf(bucketDir: Path): Int =
+    bucketDir.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
+
+  /** Give every data file staged under `tmp` its bucket's suffix (with
+    * its checksum sibling). Runs inside the staging dir before any intent
+    * marker names it, like the Spark write that staged the files, so a
+    * crash here leaves only staging debris the next write replaces. */
+  private def suffixStaged(tmp: Path): Unit =
+    dataFiles(tmp).foreach { f =>
+      val name = f.getFileName.toString
+      val to = bucketFileName(name, bucketIdOf(f.getParent))
+      Files.move(f, f.resolveSibling(to))
+      val crc = f.resolveSibling(s".$name.crc")
+      if (Files.exists(crc)) Files.move(crc, f.resolveSibling(s".$to.crc"))
+    }
+
+  /** Every parquet data file under `dir`. */
+  private def dataFiles(dir: Path): List[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala
+      .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet")).toList
+    finally s.close()
+  }
 
   /** True when writing `incoming` into the stored table would change the
     * table's column set or types (analysis-only — no job runs). */
@@ -384,8 +463,8 @@ object UpsertWriter {
     fs.put(pendingOf(p),
       (tmp.getFileName.toString +: entries).mkString("", "\n", "\n").getBytes("UTF-8"))
     entries.foreach(applyEntry(p, tmp, _))
-    if (!Files.exists(markerOf(p)))
-      fs.put(markerOf(p), markerContent(n, keys))
+    if (!Files.exists(markerPath(p)))
+      fs.put(markerPath(p), markerContent(n, keys))
     fs.deleteIfExists(pendingOf(p))
     if (Files.exists(tmp)) fs.deleteTree(tmp)
   }
@@ -661,6 +740,7 @@ object UpsertWriter {
         s"bucketed write produced rows outside the touched bucket set ($strays); " +
           "is the incoming DataFrame nondeterministic?")
     }
+    suffixStaged(tmp)
     val entries = touched
       .filter(k => Files.exists(tmp.resolve(s"$BucketCol=$k")))
       .map(k => s"swap|$BucketCol=$k")
@@ -734,20 +814,13 @@ object UpsertWriter {
       .repartition(col(BucketCol)) // one task per non-empty bucket => one file each
       .write.partitionBy(BucketCol).mode("overwrite").parquet(tmp.toString)
     val stamp = java.util.UUID.randomUUID().toString.take(12)
-    val staged = {
-      val s = Files.walk(tmp)
-      try s.iterator().asScala
-        .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
-        .map(tmp.relativize)
-        .toList
-      finally s.close()
-    }
+    val staged = dataFiles(tmp).map(tmp.relativize)
     if (staged.isEmpty) { FsUtil.deleteTree(tmp); return Nil }
     val entries = staged.zipWithIndex.map { case (rel, i) =>
-      s"file|$rel|${rel.getParent}/delta-$stamp-$i.parquet"
+      s"file|$rel|${rel.getParent}/${bucketFileName(s"delta-$stamp-$i.parquet", bucketIdOf(rel.getParent))}"
     }
     publishStaged(p, tmp, entries, n, keys)
-    staged.map(_.getParent.getFileName.toString.stripPrefix(s"$BucketCol=").toInt).distinct
+    staged.map(rel => bucketIdOf(rel.getParent)).distinct
   }
 
   /** Compact any bucket whose delta-file count exceeds [[DeltaFilesMax]]
@@ -774,8 +847,8 @@ object UpsertWriter {
     val p = pathOf(dir, table)
     withTableLease(p) {
       repairPending(p)
-      (bucketCount(p), bucketKeys(p)) match {
-        case (Some(n), Some(keys)) if Files.exists(p) =>
+      markerOf(p) match {
+        case Some(Marker(n, keys, _)) if keys.nonEmpty && Files.exists(p) =>
           val due = (0 until n).filter(deltaFiles(p, _).exists(_ >= minDeltaFiles))
           if (due.nonEmpty) swapTouchedBuckets(readBuckets(spark, p, due), p, keys, n, due)
           due
@@ -922,7 +995,8 @@ object UpsertWriter {
     content.withColumn(BucketCol, bucketOf(keys, n))
       .repartition(n, col(BucketCol))
       .write.partitionBy(BucketCol).mode("overwrite").parquet(tmp.toString)
-    fs.put(tmp.resolve("_graft_buckets"), markerContent(n, keys))
+    suffixStaged(tmp)
+    fs.put(markerPath(tmp), markerContent(n, keys))
     // the delete-then-move pair is its own torn window (a crash between
     // them loses the table); the staged tmp is complete, so a sibling
     // intent marker lets repairPending roll the swap forward
@@ -974,16 +1048,20 @@ object UpsertWriter {
   /** The frame both write verbs run in, under the table's lease: reject
     * the reserved column, finish any interrupted publish, then
     *  - no table yet: write `prepare(incoming)` bucketed (creation);
-    *  - a legacy flat table, or a batch that changes the stored schema:
-    *    rewrite the whole table as `evolve(stored)`;
-    *  - otherwise the incremental step: align the batch to the stored
+    *  - a legacy flat table, a marker that predates key recording, or a
+    *    batch that changes the stored schema: rewrite the whole table as
+    *    `evolve(stored)`, which re-routes every row by today's rule;
+    *  - otherwise the incremental step, routed by the keys the marker
+    *    records (a table keeps the routing it was created with, so a new
+    *    row always meets its stored duplicate): align the batch to the stored
     *    schema BEFORE hashing (a long batch into a double column, or a
     *    batch missing a stored column, must hash the value that gets
     *    written), `prepare` it, pin it, collect the buckets it touches, and
     *    hand `step` the batch plus a partition-pruned scan of those
     *    buckets. `step` publishes and returns the buckets it gave delta
     *    files, which are then compacted if due.
-    * `keysOf` names the routing keys of a table with the given columns. */
+    * `keysOf` names the routing keys of a new table with the given
+    * columns. */
   private def write(
       spark: SparkSession, dir: String, table: String, incoming: DataFrame, numBuckets: Int,
       keysOf: DataFrame => Seq[String], prepare: DataFrame => DataFrame)(
@@ -998,9 +1076,9 @@ object UpsertWriter {
       if (!Files.exists(p)) rewrite(prepare(incoming), numBuckets)
       else {
         val stored = readTable(spark, dir, table)
-        bucketCount(p) match {
-          case Some(n) if !schemaChanges(stored, incoming) =>
-            val t = Bucketed(stored, p, keysOf(stored), n)
+        markerOf(p) match {
+          case Some(Marker(n, keys, _)) if keys.nonEmpty && !schemaChanges(stored, incoming) =>
+            val t = Bucketed(stored, p, keys, n)
             // the select pins the stored column order: delta files must be
             // byte-schema-identical to base files for the raw-glob contract
             val batch = prepare(alignTo(stored, incoming))
@@ -1011,7 +1089,7 @@ object UpsertWriter {
               val old = readBuckets(spark, p, touchedBuckets(batch, t.keys, n))
               compactIfNeeded(spark, p, t.keys, n, step(t, batch, old))
             } finally batch.unpersist()
-          case n => rewrite(evolve(stored), n.getOrElse(numBuckets))
+          case m => rewrite(evolve(stored), m.fold(numBuckets)(_.n))
         }
       }
     }
@@ -1124,38 +1202,45 @@ object UpsertWriter {
     } finally tagged.unpersist()
   }
 
-  /** What [[appendKeyed]] compares rows by: its routing/dedup key columns
-    * for a table of the given columns, and how a batch keeps one row per
-    * key. */
+  /** What [[appendKeyed]] compares rows by: its dedup key columns for a
+    * table of the given columns, the routing keys of a new table (a subset
+    * of the dedup key, so duplicates share a bucket), and how a batch
+    * keeps one row per key. */
   sealed abstract class AppendKey(
       private[UpsertWriter] val cols: DataFrame => Seq[String],
+      private[UpsertWriter] val route: DataFrame => Seq[String],
       private[UpsertWriter] val first: DataFrame => DataFrame)
 
   object AppendKey {
     /** The id (observed-data). */
-    case object Id extends AppendKey(_ => Seq("id"), _.dropDuplicates("id"))
+    case object Id extends AppendKey(_ => Seq("id"), _ => Seq("id"), _.dropDuplicates("id"))
 
     /** A given column tuple (`__columns`' (otype, path)). The caller's
       * batch holds one row per tuple already
       * ([[graft.model.StixMeta.columnRows]]). */
-    final case class Cols(keys: Seq[String]) extends AppendKey(_ => keys, identity)
+    final case class Cols(keys: Seq[String]) extends AppendKey(_ => keys, _ => keys, identity)
 
-    /** The whole row, as its name-sorted column set (edge and provenance
-      * tables): identical rows hash identically whatever the batch's
-      * column order. */
-    case object Row extends AppendKey(_.columns.toSeq.sorted, _.distinct())
+    /** The whole row, as its name-sorted column set (provenance tables):
+      * identical rows hash identically whatever the batch's column order. */
+    case object Row extends AppendKey(_.columns.toSeq.sorted, _.columns.toSeq.sorted, _.distinct())
+
+    /** The whole row, routed by the one column `on` (edge tables, on the
+      * SCO side's join key): a join on `on` reads the store's buckets
+      * without a shuffle. */
+    final case class RowOn(on: String)
+        extends AppendKey(_.columns.toSeq.sorted, _ => Seq(on), _.distinct())
   }
 
   /** Append the rows of `incoming` whose key is not stored yet: the first
     * sighting of a key wins, and a later sighting — conflicting or not —
     * adds nothing (the reference's INSERT ... ON CONFLICT DO NOTHING,
-    * sqlstorage.py:389-392). Buckets on the key, so the pruned anti-join is
-    * exact and every surviving row is a pure insert: O(batch) delta
-    * appends, never a bucket rewrite. */
+    * sqlstorage.py:389-392). Routes on a subset of the key, so the pruned
+    * anti-join is exact and every surviving row is a pure insert: O(batch)
+    * delta appends, never a bucket rewrite. */
   def appendKeyed(
       spark: SparkSession, dir: String, table: String, incoming: DataFrame,
       key: AppendKey, numBuckets: Int = DefaultBuckets): Unit =
-    write(spark, dir, table, incoming, numBuckets, key.cols, key.first) { stored =>
+    write(spark, dir, table, incoming, numBuckets, key.route, key.first) { stored =>
       // stored rows win; the batch is aligned to the widened schema first
       // so a whole-row key may name columns only one side has
       val batch = key.first(incoming)
@@ -1164,7 +1249,7 @@ object UpsertWriter {
         unseen(alignTo(target, batch), alignTo(target, stored), key.cols(target)),
         allowMissingColumns = true)
     } { (t, batch, old) =>
-      appendDeltaFiles(unseen(batch, old, t.keys), t.p, t.keys, t.n)
+      appendDeltaFiles(unseen(batch, old, key.cols(batch)), t.p, t.keys, t.n)
     }
 
   private def mergeById(df: DataFrame): DataFrame = {

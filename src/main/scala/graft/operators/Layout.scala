@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-/** Physical-layout tools for 100 TB operation: skew-salted joins and
-  * bucketed co-located joins. Neither changes results — only where rows
-  * live and how many shuffles a plan needs.
+/** Physical-layout tools for 100 TB operation: skew-salted joins, Z-order
+  * clustering and file-level indexes. None changes results — only where
+  * rows live and how many shuffles or files a plan needs.
   */
 object Layout {
 
@@ -31,55 +31,6 @@ object Layout {
       .join(exploded, Seq(key, "__salt"), joinType)
       .drop("__salt")
   }
-
-  /** Persist a DataFrame bucketed+sorted by `key` as a managed table:
-    * subsequent equi-joins between tables bucketed the same way need NO
-    * shuffle (Catalyst sees the matching output partitioning). This is the
-    * reference's edge-table index policy (firepit/sqlstorage.py:298-301)
-    * translated to Spark's layout primitive. */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      key: String,
-      buckets: Int): Unit = {
-    val spark = df.sparkSession
-    // a PREVIOUS JVM may have left the managed table's warehouse directory
-    // on disk without a catalog entry (the in-memory catalog dies with the
-    // session); saveAsTable then fails with LOCATION_ALREADY_EXISTS — drop
-    // the catalog entry AND clear the stale location before writing.
-    // Best-effort and local-filesystem only: a remote warehouse (hdfs/s3)
-    // or an unparseable dir just skips the cleanup.
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    try {
-      val raw = spark.conf.get("spark.sql.warehouse.dir")
-      val uri = java.net.URI.create(raw)
-      val base = uri.getScheme match {
-        case null   => raw
-        case "file" => uri.getPath
-        case _      => null
-      }
-      if (base != null) {
-        val loc = java.nio.file.Paths.get(base)
-          .resolve(table.toLowerCase(java.util.Locale.ROOT))
-        if (java.nio.file.Files.exists(loc)) graft.ingest.FsUtil.deleteTree(loc)
-      }
-    } catch { case _: Exception => () }
-    df.write
-      .mode("overwrite")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** Join two same-bucketed tables; with matching bucket specs the plan is
-    * shuffle-free (assert via hasShuffle below). */
-  def bucketedJoin(
-      spark: SparkSession,
-      leftTable: String,
-      rightTable: String,
-      key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 
   /** Morton (Z-order) interleave of two non-negative integer keys, `bits`
     * low bits each: bit i of `a` lands at position 2i, bit i of `b` at

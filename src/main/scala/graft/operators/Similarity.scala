@@ -890,13 +890,13 @@ object Similarity {
       idCol: String, embCol: String, sub: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val slices = pqSlices(corpus, m, sub, idCol, "vid", embCol, "v")
-    // init: the k smallest-id vectors of each subspace, ranked by id —
-    // identical to kmeansCentroids' orderBy(id).limit(k) + row_number init
-    // applied per subspace (ids are unique)
-    var centroids = slices
+    // init: the k smallest-id vectors, sliced into every subspace and
+    // ranked by id — kmeansCentroids' orderBy(id).limit(k) + row_number
+    // init applied per subspace (ids are unique). The k-row top-k runs
+    // before the explode, so the corpus is never sorted.
+    var centroids = pqSlices(corpus.orderBy(col(idCol)).limit(k), m, sub, idCol, "vid", embCol, "v")
       .withColumn("__rn",
         row_number().over(Window.partitionBy(col("subspace")).orderBy(col("vid"))))
-      .where(col("__rn") <= k)
       .select(
         col("subspace"),
         col("__rn").cast("long").as("centroid_id"),

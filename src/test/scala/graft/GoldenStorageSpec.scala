@@ -246,103 +246,42 @@ class GoldenStorageSpec extends SparkSpec {
     assert(s.count("url") == 31)
   }
 
-  test("delete() drops finish()'s bucketed warehouse tables too") {
+  private def catalogTables(): Set[String] =
+    spark.catalog.listTables().collect().map(_.name).toSet
+
+  test("delete() after finish() leaves nothing behind; the store is reusable") {
     val s = bundled()
+    val before = catalogTables()
     s.finish()
-    // finish wrote bucketed saveAsTable copies into the Spark warehouse,
-    // prefixed by this workDir's md5 tag (other suites' tables must survive)
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(s.workDir).getAbsolutePath.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val mine = spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith(s"graft_f$tag")).toSet
-    assert(mine.nonEmpty, "expected finish() to register warehouse tables")
-    // finish()'s edge-table re-registrations must not surface internals
+    // finish() writes no copy: no catalog table, no internal name surfaces
+    assert(catalogTables() == before && !before.exists(_.startsWith("graft_f")))
     assert(!s.tables().exists(_.startsWith("__")),
       s"tables() leaked internal tables: ${s.tables().filter(_.startsWith("__"))}")
     s.delete()
-    val after = spark.catalog.listTables().collect().map(_.name).toSet
-    // every warehouse copy of THIS workdir is gone (no data survives delete)
-    assert(mine.intersect(after).isEmpty,
-      s"warehouse tables survived delete(): ${mine.intersect(after)}")
-    // and a fresh finish() on re-cached data works
+    assert(s.tables().isEmpty)
+    // and finish() on re-cached data works
     s.cache("q2", Seq(fixture("test_bundle.json")))
     s.finish()
     assert(s.count("url") == 31)
   }
 
-  test("finish() on an unchanged store skips the warehouse rewrite; new data re-buckets") {
+  test("finish() runs no job, writes no catalog table; later data is seen") {
     val s = bundled()
     s.finish()
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(s.workDir).getAbsolutePath.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    // observable: the bucketed warehouse files' (path, mtime) set — a
-    // rewrite mints fresh part files, a skip leaves every byte untouched
-    def warehouseFiles(): Set[(String, Long)] = {
-      val base = java.net.URI.create(spark.conf.get("spark.sql.warehouse.dir")).getPath
-      val root = java.nio.file.Paths.get(base)
-      val st = java.nio.file.Files.list(root)
-      val tabs =
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala
-            .filter(_.getFileName.toString.startsWith(s"graft_f$tag")).toList
-        } finally st.close()
-      tabs.flatMap { d =>
-        val w = java.nio.file.Files.walk(d)
-        try {
-          import scala.jdk.CollectionConverters._
-          w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-            .map(f => f.toString ->
-              java.nio.file.Files.getLastModifiedTime(f).toMillis).toList
-        } finally w.close()
-      }.toSet
-    }
-    val before = warehouseFiles()
-    assert(before.nonEmpty, "expected finish() to write bucketed warehouse tables")
-    // a NEW Storage over the same (unchanged) workdir re-finishes: the
-    // census matches, so no warehouse file may be touched AND no Spark job
-    // may run (the skip is driver-side metadata: NIO census walk + catalog
-    // probe + view re-registration)
+    val before = catalogTables()
     val s2 = new Storage(spark, s.workDir)
     val (_, jobs) = countJobs(s2.finish())
-    assert(jobs == 0, s"finish() over an unchanged store ran $jobs Spark jobs (expected 0)")
-    assert(warehouseFiles() == before,
-      "finish() over an unchanged store rewrote the bucketed layout")
-    // queries still answer through the re-registered layout
+    assert(jobs == 0, s"finish() ran $jobs Spark jobs (expected 0)")
+    assert(catalogTables() == before && !before.exists(_.startsWith("graft_f")))
     s2.extract("urls_refin", "url", "q1", "[url:value LIKE '%page/1%']")
     assert(s2.values("url:value", "urls_refin").length == 14)
-    // new data in one table invalidates ITS census: that table re-buckets
+    // data cached after finish() is seen at once, and after another finish()
     s2.load("lv_refin", Seq("http://refinish.example.com/z"), "url")
-    val s3 = new Storage(spark, s.workDir)
-    s3.finish()
-    val urlAfter = warehouseFiles().filter(_._1.contains("_url"))
-    assert(urlAfter != before.filter(_._1.contains("_url")),
-      "finish() served a stale bucketed url table after new data landed")
-    s.delete()
-  }
-
-  test("finish(buckets=N') over an unchanged store re-buckets — a layout-parameter change is not 'unchanged'") {
-    val s = bundled()
-    s.finish(buckets = 4)
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(s.workDir).getAbsolutePath.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val tbl = s"graft_f${tag}_url"
-    def numBuckets(): Int = spark.sql(s"DESCRIBE FORMATTED `$tbl`")
-      .where(org.apache.spark.sql.functions.col("col_name") === "Num Buckets")
-      .select("data_type").head().getString(0).trim.toInt
-    assert(numBuckets() == 4)
-    // a NEW Storage over the same UNCHANGED workdir, different buckets: the
-    // census alone matches, but the skip key folds in the layout
-    // parameters, so this must RE-BUCKET rather than re-register the stale
-    // 4-bucket layout
-    val s2 = new Storage(spark, s.workDir)
-    s2.finish(buckets = 16)
-    assert(numBuckets() == 16,
-      "finish(buckets=16) over an unchanged store re-registered the stale 4-bucket layout")
-    assert(s2.values("url:value", "url").nonEmpty)
+    def urls(st: Storage) = st.values("url:value", "url").map(_.toString)
+    assert(urls(s2).contains("http://refinish.example.com/z"))
+    s2.finish()
+    assert(urls(new Storage(spark, s.workDir)).contains("http://refinish.example.com/z"))
+    assert(urls(s2).length == 32)
     s.delete()
   }
 

@@ -16,12 +16,13 @@ class LayoutSpec extends SparkSpec {
     assert(salted.count(_.getInt(0) == 1) == 900)
   }
 
-  test("finish() buckets edge tables: observation join loses its shuffle exchanges") {
+  test("store layout: SCO join on __contains has no shuffle, fresh and after reopen") {
     def countExchanges(df: org.apache.spark.sql.DataFrame): Int =
       "Exchange hashpartitioning".r
         .findAllIn(df.queryExecution.executedPlan.toString)
         .length
-    val s = new graft.api.Storage(spark, suiteTempDir("graft-finish"))
+    val dir = suiteTempDir("graft-storejoin")
+    val s = new graft.api.Storage(spark, dir)
     val bundle =
       """{"type":"bundle","id":"bundle--bf","objects":[
         |{"type":"observed-data","id":"observed-data--of",
@@ -32,26 +33,29 @@ class LayoutSpec extends SparkSpec {
         |   "1":{"type":"ipv4-addr","value":"10.0.0.2"}
         | }}]}""".stripMargin
     s.cache("qf", bundle)
+    def scoJoin(st: graft.api.Storage) = {
+      val v = st.catalog.resolve("ipv4-addr")
+      val c = st.catalog.resolve("__contains")
+      v.join(c, v("id") === c("target_ref"))
+    }
     // force shuffles visible (tiny tables would otherwise broadcast)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val before = countExchanges(s.timestamped("ipv4-addr"))
-      s.finish(buckets = 4)
-      val after = countExchanges(s.timestamped("ipv4-addr"))
-      assert(before >= 2, s"expected shuffling plan before finish, got $before exchanges")
-      assert(after < before, s"finish should remove exchanges: before=$before after=$after")
-      // SCO-side join (bucketed id = bucketed target_ref) is fully co-located
-      val v = s.catalog.resolve("ipv4-addr")
-      val c = s.catalog.resolve("__contains")
-      assert(countExchanges(v.join(c, v("id") === c("target_ref"))) == 0)
-      // new ingest drops the stale bucketed layout
+      // no finish(): the store's buckets are the join layout
+      assert(countExchanges(scoJoin(s)) == 0)
+      assert(scoJoin(s).count() == 2)
+      // the same tables read plainly shuffle both sides
+      def plain(t: String) = spark.read.parquet(s"$dir/$t.parquet").drop("__bucket")
+      val (v, c) = (plain("ipv4-addr"), plain("__contains"))
+      assert(countExchanges(v.join(c, v("id") === c("target_ref"))) >= 2)
+      // the layout is on disk, so a reopened store keeps it
+      assert(countExchanges(scoJoin(new graft.api.Storage(spark, dir))) == 0)
+      // and new ingest keeps it too
       s.cache("qf2", bundle.replace("10.0.0.2", "10.0.0.9").replace("observed-data--of", "observed-data--of2").replace("bundle--bf", "bundle--bf2"))
       assert(s.count("ipv4-addr") == 3)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("SHOW TABLES").collect().map(_.getString(1)).filter(_.startsWith("graft_f"))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+      assert(countExchanges(scoJoin(s)) == 0)
+      assert(scoJoin(s).count() == 4)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
   test("zOrderValue: exact interleave, locality, and mask behavior") {
@@ -261,22 +265,22 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle") {
-    val a = (1 to 500).map(i => (i.toLong, s"a$i")).toDF("id", "av")
-    val b = (1 to 500).map(i => (i.toLong, s"b$i")).toDF("id", "bv")
-    Layout.writeBucketed(a, "bucketed_a", "id", 4)
-    Layout.writeBucketed(b, "bucketed_b", "id", 4)
-    try {
-      val joined = Layout.bucketedJoin(spark, "bucketed_a", "bucketed_b", "id")
-      assert(!Layout.hasShuffle(joined), "bucketed join should not shuffle")
-      assert(joined.count() == 500)
-      // contrast: the same join on plain frames shuffles (or broadcasts —
-      // force SMJ off broadcast to observe the exchange)
+    withTempDir("graft-bjoin") { dir =>
+      val a = (1 to 500).map(i => (s"id-$i", s"a$i")).toDF("id", "av")
+      val b = (1 to 500).map(i => (s"id-$i", s"b$i")).toDF("id", "bv")
+      // 4 buckets, one file each: small enough that no read coalesces
+      graft.ingest.UpsertWriter.upsert(spark, dir, "a", a, numBuckets = 4)
+      graft.ingest.UpsertWriter.upsert(spark, dir, "b", b, numBuckets = 4)
+      def stored(t: String) = graft.ingest.UpsertWriter.readTable(spark, dir, t)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try assert(Layout.hasShuffle(a.join(b, "id")))
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bucketed_a")
-      spark.sql("DROP TABLE IF EXISTS bucketed_b")
+      try {
+        val joined = stored("a").join(stored("b"), "id")
+        assert(!Layout.hasShuffle(joined), "bucketed join should not shuffle")
+        assert(joined.count() == 500)
+        // contrast: the same join over plain reads of the same files shuffles
+        def plain(t: String) = spark.read.parquet(s"$dir/$t.parquet").drop("__bucket")
+        assert(Layout.hasShuffle(plain("a").join(plain("b"), "id")))
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     }
   }
 

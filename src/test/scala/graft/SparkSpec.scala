@@ -37,7 +37,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     spark.sparkContext.addSparkListener(counter)
     val out =
-      try { val r = body; Thread.sleep(1000L); r } // listener bus is async; drain it
+      try { val r = body; org.apache.spark.TestListenerBus.drain(spark.sparkContext); r }
       finally spark.sparkContext.removeSparkListener(counter)
     (out, jobs.get())
   }

@@ -26,6 +26,16 @@ class UpsertBucketSpec extends SparkSpec {
     finally s.close()
   }
 
+  /** The last marker line of a table written in Spark's bucket-file layout. */
+  private val SparkBucketsLine = "@spark-bucket-files"
+
+  /** The bucket spec of a read's file relation (None: a plain read). */
+  private def bucketSpecOf(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect { case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r.bucketSpec }
+      .flatten
+
   private def df(rows: Seq[(String, String, Long)]) = {
     val sp = spark
     import sp.implicits._
@@ -64,7 +74,9 @@ class UpsertBucketSpec extends SparkSpec {
   test("cache records each table's bucket count and routing keys in its marker") {
     // pins the on-disk layout the write verbs share: if a table's routing
     // keys drifted, rows from new writes would land in buckets that do not
-    // match what older stores recorded
+    // match what older stores recorded. The edge tables route on the SCO
+    // side's join key, and the last line says the files carry Spark's
+    // bucket suffix (the table reads as a bucketed relation)
     withTempDir("graft-markers") { dir =>
       val s = new graft.api.Storage(spark, dir)
       s.cache("q1", Seq(new java.io.File("src/test/resources/fixtures/test_bundle.json").getAbsolutePath))
@@ -77,12 +89,13 @@ class UpsertBucketSpec extends SparkSpec {
           .trim.split('\n').toSeq
         val keys = t match {
           case "__columns"  => Seq("otype", "path")
-          case "__contains" => Seq("source_ref", "target_ref", "x_firepit_rank")
-          case "__reflist"  => Seq("ref_name", "source_ref", "target_ref")
+          case "__contains" => Seq("target_ref")
+          case "__reflist"  => Seq("source_ref")
           case "__queries"  => Seq("query_id", "sco_id")
           case _            => Seq("id") // every SCO table and observed-data
         }
-        assert(marker == UpsertWriter.DefaultBuckets.toString +: keys, s"$t marker: $marker")
+        assert(marker == (UpsertWriter.DefaultBuckets.toString +: keys) :+ SparkBucketsLine,
+          s"$t marker: $marker")
       }
     }
   }
@@ -115,6 +128,75 @@ class UpsertBucketSpec extends SparkSpec {
       assert(fileColumns("c") == Seq(Seq("dtype", "otype", "path")))
       assert(UpsertWriter.readTable(spark, dir, "o").count() == 2)
       assert(UpsertWriter.readTable(spark, dir, "c").count() == 2)
+    }
+  }
+
+  test("every published file carries its bucket's suffix: creation, delta, swap, compaction") {
+    withTempDir("graft-suffix") { dir =>
+      val table = java.nio.file.Paths.get(dir, "t.parquet")
+      def dataFiles(): Seq[Path] = {
+        val s = Files.walk(table)
+        try s.iterator().asScala.filter { f =>
+          Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet") &&
+            !f.getFileName.toString.startsWith(".")
+        }.toList
+        finally s.close()
+      }
+      def assertSuffixed(step: String): Unit = dataFiles().foreach { f =>
+        val dirBucket = f.getParent.getFileName.toString.stripPrefix("__bucket=").toInt
+        assert(org.apache.spark.sql.execution.datasources.BucketingUtils
+          .getBucketId(f.getFileName.toString).contains(dirBucket), s"$step: $f")
+      }
+      def deltas(bucket: Int) = dataFiles()
+        .filter(f => f.getParent.getFileName.toString == s"__bucket=$bucket")
+        .map(_.getFileName.toString).partition(_.startsWith("delta-"))
+      UpsertWriter.upsert(spark, dir, "t", df((0 until 50).map(i => (s"id-$i", s"n$i", 1L))))
+      assertSuffixed("creation")
+      val n = UpsertWriter.DefaultBuckets
+      val sp = spark
+      import sp.implicits._
+      val bucket0 = (0 until 2000).map(i => s"x-$i").toDF("id")
+        .where(pmod(hash(col("id")), lit(n)) === 0)
+        .collect().map(_.getString(0)).toSeq
+      UpsertWriter.upsert(spark, dir, "t", df(Seq((bucket0.head, "v", 1L))))
+      assert(deltas(0)._1.size == 1)
+      assertSuffixed("delta append")
+      UpsertWriter.upsert(spark, dir, "t", df(Seq((bucket0.head, "w", 1L))))
+      assert(deltas(0)._1.isEmpty, "an upsert of a stored id rewrites its bucket")
+      assertSuffixed("bucket swap")
+      bucket0.slice(1, UpsertWriter.DeltaFilesMax + 2)
+        .foreach(id => UpsertWriter.upsert(spark, dir, "t", df(Seq((id, "v", 1L)))))
+      assert(deltas(0)._1.isEmpty && deltas(0)._2.size == 1, "compaction past DeltaFilesMax")
+      assertSuffixed("compaction")
+      // so the table reads as a bucketed relation on its routing key
+      val read = UpsertWriter.readTable(spark, dir, "t")
+      assert(bucketSpecOf(read).map(b => (b.numBuckets, b.bucketColumnNames)) == Some((n, Seq("id"))))
+      assert(read.count() == 50 + UpsertWriter.DeltaFilesMax + 2)
+    }
+  }
+
+  test("a table from before the bucket-file layout keeps its routing and plain read") {
+    // an edge table as older code wrote it: routed on the whole row, and a
+    // marker without the layout line. Writes by today's rule (route on
+    // target_ref) must route by the RECORDED keys, or a stored duplicate
+    // would sit in another bucket than the one the batch row probes
+    withTempDir("graft-oldmarker") { dir =>
+      val sp = spark
+      import sp.implicits._
+      val e1 = (0 until 60).map(i => (s"s-$i", s"t-${i % 20}", i.toLong))
+        .toDF("source_ref", "target_ref", "x_firepit_rank")
+      UpsertWriter.appendKeyed(spark, dir, "__contains", e1, AppendKey.Row)
+      val marker = java.nio.file.Paths.get(dir, "__contains.parquet", "_graft_buckets")
+      val old = s"${UpsertWriter.DefaultBuckets}\nsource_ref\ntarget_ref\nx_firepit_rank\n"
+      Files.write(marker, old.getBytes("UTF-8"))
+      // 30 stored duplicates beside 10 new edges
+      val e2 = e1.limit(30).unionByName((60 until 70).map(i => (s"s-$i", s"t-${i % 20}", i.toLong))
+        .toDF("source_ref", "target_ref", "x_firepit_rank"))
+      UpsertWriter.appendKeyed(spark, dir, "__contains", e2, AppendKey.RowOn("target_ref"))
+      val read = UpsertWriter.readTable(spark, dir, "__contains")
+      assert(read.count() == 70, "a stored duplicate was appended again")
+      assert(new String(Files.readAllBytes(marker), "UTF-8") == old)
+      assert(bucketSpecOf(read).isEmpty, "an old-layout table must read plainly")
     }
   }
 
@@ -155,7 +237,7 @@ class UpsertBucketSpec extends SparkSpec {
         Files.readAllBytes(java.nio.file.Paths.get(dir, "t.parquet", "_graft_buckets")), "UTF-8")
       assert(marker.trim.split('\n').head == UpsertWriter.DefaultBuckets.toString,
         s"marker should lead with the bucket count, got: $marker")
-      assert(marker.trim.split('\n').toSeq.drop(1) == Seq("k1", "k2"),
+      assert(marker.trim.split('\n').toSeq.drop(1) == Seq("k1", "k2", SparkBucketsLine),
         s"marker should record the routing keys, got: $marker")
       val want = UpsertWriter.readTable(spark, dir, "t")
         .where(col("k1").isin("a-7", "a-11")).count()
