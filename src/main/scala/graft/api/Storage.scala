@@ -271,9 +271,13 @@ class Storage(val spark: SparkSession, val workDir: String) {
   /** Write the Dataset verbs' (otype, obj) object stream. One aggregate
     * over it yields the census, and with it the type list; each type's rows
     * are then built on the executors with the converter the driver verbs
-    * use ([[UpsertWriter.toRow]]), so every verb types a table alike. */
-  private def writeFlat(flat: DataFrame, queryId: String): Unit = {
+    * use ([[UpsertWriter.toRow]]), so every verb types a table alike. A
+    * source of one partition is declared so, as the driver verbs' batches
+    * are ([[UpsertWriter.onePartition]]): its census, type frames and
+    * provenance rows then plan without exchanges. */
+  private def writeFlat(source: DataFrame, queryId: String): Unit = {
     import spark.implicits._
+    val flat = UpsertWriter.onePartition(source, source.rdd.getNumPartitions)
     val census = flat.as[(String, String)]
       .flatMap { case (t, obj) =>
         Storage.parseObj(obj).map { case (k, v) => (t, k, StixMeta.kindOf(v)) } }
@@ -284,7 +288,7 @@ class Storage(val spark: SparkSession, val workDir: String) {
       val schema = Storage.schemaOf(typeCensus)
       val rows = flat.where(col("otype") === t).select("obj").as[String].rdd
         .map(obj => UpsertWriter.toRow(Storage.shortened(Storage.parseObj(obj)), schema))
-      writeTable(t, spark.createDataFrame(rows, schema))
+      writeTable(t, UpsertWriter.rowsToDF(spark, rows, schema))
     }
     val meta = StixMeta.columnRows(census)
     if (meta.nonEmpty) writeTable("__columns", UpsertWriter.rowsToDF(spark, meta))

@@ -32,6 +32,19 @@ import scala.jdk.CollectionConverters._
   * Both verbs run in one frame ([[write]]): lease, repair, then create,
   * whole-table rewrite, or the incremental bucket step below.
   *
+  * == Fixed cost per call ==
+  *
+  * A driver verb's batch is a few dozen rows, so a `cache` costs what its
+  * Spark jobs and tasks cost, not what its data costs. Two rules keep the
+  * incremental step to the jobs it needs:
+  *  - a batch held in one partition is declared so ([[onePartition]],
+  *    [[rowsToDF]]): its merge, dedup, stats aggregate and broadcast joins
+  *    plan without an exchange and run in that one task;
+  *  - every stored-table read takes its schema from the footer of one file
+  *    ([[footerSchema]], the schema Spark's writer records there), so no
+  *    read launches Spark's schema-inference job.
+  * The Dataset verbs and table creation keep their distributed plans.
+  *
   * == Bucketed incremental storage ==
   *
   * Every table is stored hash-partitioned into `__bucket=K/` subdirectories
@@ -163,9 +176,23 @@ object UpsertWriter {
   def toRow(r: collection.Map[String, Any], schema: StructType): Row =
     Row.fromSeq(schema.fields.toSeq.map(f => cell(r.getOrElse(f.name, null), f.dataType)))
 
+  /** `df`, a scan of an RDD of `partitions` partitions, declared to the
+    * planner as the one partition it is, if it is one (`coalesce(1)`
+    * plans as Spark's `SinglePartition`, which satisfies every
+    * clustering): the write frame's merge, dedup, stats aggregate and
+    * broadcast joins over such a batch then run in its one task with no
+    * exchange, where a plain RDD plan would shuffle a driver-sized batch
+    * per operator. */
+  private[graft] def onePartition(df: DataFrame, partitions: Int): DataFrame =
+    if (partitions == 1) df.coalesce(1) else df
+
+  /** `rows` as a DataFrame of `schema` ([[onePartition]]). */
+  def rowsToDF(spark: SparkSession, rows: org.apache.spark.rdd.RDD[Row], schema: StructType): DataFrame =
+    onePartition(spark.createDataFrame(rows, schema), rows.getNumPartitions)
+
   /** Driver-side rows as a one-partition DataFrame of `schema`. */
   def rowsToDF(spark: SparkSession, rows: Seq[Map[String, Any]], schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.map(toRow(_, schema)), 1), schema)
+    rowsToDF(spark, spark.sparkContext.parallelize(rows.map(toRow(_, schema)), 1), schema)
 
   /** Driver-side rows typed by their own kinds ([[columnType]]). */
   def rowsToDF(spark: SparkSession, rows: Seq[Map[String, Any]]): DataFrame =
@@ -198,11 +225,12 @@ object UpsertWriter {
     * identically: drop of an absent column is a no-op). Finishes any
     * interrupted publish first (one cheap local Files.exists probe). A
     * table whose marker records Spark-named bucket files reads as a
-    * bucketed relation on its routing keys ([[bucketedOn]]). */
+    * bucketed relation on its routing keys ([[bucketedOn]]). Launches no
+    * job ([[scan]]). */
   def readTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     repairPending(pathOf(dir, table))
     val p = pathOf(dir, table)
-    val plain = spark.read.parquet(p.toString)
+    val plain = scan(spark, p)
     val raw = (markerOf(p) match {
       case Some(m) if m.sparkBuckets => bucketedOn(plain, m)
       case _                         => plain
@@ -249,10 +277,11 @@ object UpsertWriter {
     // rewrite the full table), so any single file is authoritative — a
     // full listing at the 4096-bucket shape would cost more than the
     // pruned read this method exists to make cheap
-    val idType = firstParquetFile(p) match {
-      case Some(f) => spark.read.parquet(f.toString).schema(keyCol).dataType
-      case None    => spark.read.parquet(p.toString).schema(keyCol).dataType
-    }
+    val first = firstParquetFile(p)
+    val schema = first.flatMap(footerSchema(spark, _))
+    val idType = schema
+      .orElse(first.map(f => spark.read.parquet(f.toString).schema))
+      .getOrElse(scan(spark, p).schema)(keyCol).dataType
     val keyLits = keys.map(k => lit(k).cast(idType))
     val pred = keyLits.map(col(s"`$keyCol`") === _).reduce(_ || _)
     markerOf(p) match {
@@ -265,7 +294,7 @@ object UpsertWriter {
           .filter(Files.exists(_)).map(_.toString)
         if (dirs.isEmpty) readTable(spark, dir, table).where(lit(false))
         else
-          spark.read.option("basePath", p.toString).parquet(dirs.toIndexedSeq: _*)
+          reader(spark, schema).option("basePath", p.toString).parquet(dirs.toIndexedSeq: _*)
             .drop(BucketCol)
             .where(pred)
       case _ => readTable(spark, dir, table).where(pred)
@@ -274,7 +303,46 @@ object UpsertWriter {
 
   /** The rows of `buckets` only: a partition-pruned scan of table `p`. */
   private def readBuckets(spark: SparkSession, p: Path, buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(p.toString).where(col(BucketCol).isin(buckets: _*)).drop(BucketCol)
+    scan(spark, p).where(col(BucketCol).isin(buckets: _*)).drop(BucketCol)
+
+  /** A plain read of the table (or snapshot) tree `p`, `__bucket` column
+    * included, that launches no job: the schema comes from one file's
+    * footer ([[footerSchema]]), so Spark runs no inference job. A bucketed
+    * tree is read as its `__bucket=K` dirs under `p` as the partition base
+    * path; naming `p` itself would make Spark ignore it as a hidden path
+    * whenever the table name starts with `_` (`__contains`, ...). A legacy
+    * flat table, or one with no bucket dir, reads `p` as it is. */
+  private def scan(spark: SparkSession, p: Path): DataFrame = {
+    val first = firstParquetFile(p)
+    val r = reader(spark, first.flatMap(footerSchema(spark, _)))
+    if (first.exists(_.getParent.getFileName.toString.startsWith(s"$BucketCol=")))
+      r.option("basePath", p.toString).parquet(s"$p/$BucketCol=*")
+    else r.parquet(p.toString)
+  }
+
+  /** A parquet reader with `schema` given, or inferring it when None. */
+  private def reader(spark: SparkSession, schema: Option[StructType]) =
+    schema.fold(spark.read)(spark.read.schema)
+
+  /** The footer key Spark's parquet writer records its row schema under. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark recorded in parquet file `f`'s footer; None for a
+    * file without that key (written by another engine) or gone before its
+    * footer was read (a concurrent swap): the caller then infers. Given to
+    * a read, it is made nullable at every level by Spark itself, as an
+    * inferred schema is. A driver-side footer read, like
+    * [[FsUtil.footerRowCount]]: no job. */
+  private def footerSchema(spark: SparkSession, f: Path): Option[StructType] =
+    try {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+      try Option(r.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+      finally r.close()
+    } catch { case _: java.io.IOException => None } // gone under a swap: infer
 
   /** First parquet data file under the table tree (any one — all buckets
     * share a single schema). Walks bucket dirs lazily and stops at the
@@ -788,7 +856,7 @@ object UpsertWriter {
       deltaFilesMax: Int = DeltaFilesMax): DataFrame = {
     val p = pathOf(dir, table)
     repairPending(p)
-    spark.read.parquet(p.toString)
+    scan(spark, p)
       .select(
         col(BucketCol).as("bucket"),
         isDeltaFileCol.as("d"),
@@ -963,7 +1031,7 @@ object UpsertWriter {
   def readSnapshot(spark: SparkSession, dir: String, table: String, name: String): DataFrame = {
     val target = snapshotPath(dir, table, name)
     require(Files.exists(snapOkOf(target)), s"no such snapshot: $table@$name")
-    spark.read.parquet(target.toString).drop(BucketCol)
+    scan(spark, target).drop(BucketCol)
   }
 
   /** Published (marker-complete) snapshot names for a table, sorted. */

@@ -200,6 +200,106 @@ class UpsertBucketSpec extends SparkSpec {
     }
   }
 
+  /** One bundle of `range.size` flows: per flow an observed-data holding a
+    * network-traffic between two ipv4-addrs. Flows of one index are
+    * identical in every bundle, so overlapping ranges re-see stored rows. */
+  private def flows(range: Range): String = range.map { i =>
+    s"""{"type":"observed-data","id":"observed-data--00000000-0000-4000-8000-${f"$i%012d"}",
+       |"first_observed":"2024-01-01T00:00:00.000Z","last_observed":"2024-01-01T00:01:00.000Z",
+       |"number_observed":1,"objects":{
+       |"0":{"type":"ipv4-addr","value":"10.0.0.${i % 250}"},
+       |"1":{"type":"ipv4-addr","value":"10.1.0.${i % 250}"},
+       |"2":{"type":"network-traffic","src_ref":"0","dst_ref":"1","src_port":${1000 + i},
+       |     "dst_port":443,"protocols":["tcp"]}}}""".stripMargin
+  }.mkString("""{"type":"bundle","id":"bundle--1","objects":[""", ",", "]}")
+
+  /** A store holding a cached fixture and two flow GETs, the second of
+    * which re-sees 4 stored flows (delta files and bucket rewrites). */
+  private lazy val flowStore = {
+    val s = new graft.api.Storage(spark, suiteTempDir("graft-flows"))
+    s.cache("q0", new String(Files.readAllBytes(
+      java.nio.file.Paths.get("src/test/resources/fixtures/test_bundle.json")), "UTF-8"))
+    s.cache("q1", flows(0 until 16))
+    s.cache("q2", flows(12 until 28))
+    s
+  }
+
+  test("readTable takes Spark's inferred schema from one footer, with no job") {
+    val dir = flowStore.workDir
+    // a table whose footers record a non-nullable column
+    val sp = spark
+    import sp.implicits._
+    UpsertWriter.appendKeyed(spark, dir, "nonnull",
+      (0 until 5).map(i => (s"k$i", i.toLong)).toDF("k", "n"), AppendKey.Cols(Seq("k")))
+    val tables = UpsertWriter.tables(dir)
+    assert(tables.contains("__contains") && tables.contains("network-traffic"))
+    val (schemas, jobs) = countJobs(tables.map(t => UpsertWriter.readTable(spark, dir, t).schema))
+    assert(jobs == 0, s"readTable of ${tables.size} tables launched $jobs jobs")
+    tables.zip(schemas).foreach { case (t, got) =>
+      val inferred = spark.read.parquet(java.nio.file.Paths.get(dir, s"$t.parquet").toString)
+        .drop("__bucket").schema
+      // StructType equality: names, types, order, nullability, metadata
+      assert(got == inferred, s"table $t")
+    }
+  }
+
+  test("a table named like a hidden path is read through its bucket dirs") {
+    val read = UpsertWriter.readTable(spark, flowStore.workDir, "__contains")
+    val roots = read.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect { case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+      r.location.rootPaths.map(_.getName)
+    }.getOrElse(Nil)
+    assert(roots.nonEmpty && roots.forall(_.startsWith("__bucket=")), s"root paths $roots")
+    assert(read.count() == spark.read.parquet(
+      java.nio.file.Paths.get(flowStore.workDir, "__contains.parquet").toString).count())
+  }
+
+  test("a table whose files lack Spark's footer schema still reads, flat or bucketed") {
+    withTempDir("graft-nofooter") { dir =>
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.hadoop.util.HadoopOutputFile
+      val conf = spark.sparkContext.hadoopConfiguration
+      val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message m { required binary id (UTF8); optional int64 n; }")
+      def write(f: Path, ids: Seq[Int]): Unit = {
+        Files.createDirectories(f.getParent)
+        val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), conf)).withType(schema).withConf(conf).build()
+        val g = new SimpleGroupFactory(schema)
+        try ids.foreach(i => w.write(g.newGroup().append("id", s"id-$i").append("n", i.toLong)))
+        finally w.close()
+      }
+      val flat = java.nio.file.Paths.get(dir, "flat.parquet", "part-0.parquet")
+      write(flat, 0 until 3)
+      val bk = java.nio.file.Paths.get(dir, "bk.parquet")
+      write(bk.resolve("__bucket=0/part-0.parquet"), 0 until 2)
+      write(bk.resolve("__bucket=1/part-1.parquet"), 2 until 5)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(flat.toUri), conf))
+      try assert(!r.getFileMetaData.getKeyValueMetaData
+        .containsKey("org.apache.spark.sql.parquet.row.metadata"))
+      finally r.close()
+      for ((t, n) <- Seq("flat" -> 3, "bk" -> 5)) {
+        val read = UpsertWriter.readTable(spark, dir, t)
+        assert(read.columns.toSeq == Seq("id", "n"), t)
+        assert(read.collect().map(_.getLong(1)).sorted.toSeq == (0L until n.toLong), t)
+      }
+    }
+  }
+
+  test("a 16-flow GET into a populated store stays under its job ceiling") {
+    // 4 of the 16 flows are stored already, so the GET takes the upsert
+    // path of every table it touches. The ceiling is the count measured
+    // once a driver batch planned without exchanges and table reads
+    // without inference jobs; before that this GET launched 59
+    val s = flowStore
+    val (_, jobs) = countJobs(s.cache("q3", flows(24 until 40)))
+    assert(jobs <= 34, s"GET launched $jobs jobs")
+  }
+
   test("readForKeys: point lookup opens only the probed buckets, equals the full-scan filter") {
     withTempDir("graft-point") { dir =>
       val table = java.nio.file.Paths.get(dir, "t.parquet")
