@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** What the measurement mains (Bench, Perf, PerfDetail, QProbe,
-  * StreamProbe, PlanDump) and Verify share: the local session shape and
-  * the untimed JIT warmup. */
+/** What Bench, PlanDump and Verify share: the local session shape and the
+  * untimed JIT warmup. */
 object Harness {
 
   /** Worker count: SPARK_GRAFT_CPUS, else the main's own default. */

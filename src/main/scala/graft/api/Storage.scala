@@ -128,8 +128,11 @@ class Storage(val spark: SparkSession, val workDir: String) {
         // appends hold the same advisory lease compaction takes: the
         // pre-compaction journal was append-only (concurrent instances could
         // only interleave lines), and compaction's read→rewrite must not
-        // silently drop a line a peer appends in between (ADVICE r16)
-        UpsertWriter.withTableLease(journalPath, renew = false) {
+        // silently drop a line a peer appends in between (ADVICE r16).
+        // One line takes milliseconds, so the append's lease is short and
+        // unrenewed: a holder that dies mid-append blocks the journal for
+        // `AppendLeaseMs`, not the ten minutes a table verb may hold
+        UpsertWriter.withTableLease(journalPath, leaseMs = Storage.AppendLeaseMs, renew = false) {
           java.nio.file.Files.write(
             journalPath,
             (line + "\n").getBytes("UTF-8"),
@@ -1092,6 +1095,10 @@ class Storage(val spark: SparkSession, val workDir: String) {
 }
 
 object Storage {
+  /** How long a journal append holds the journal's lease. Compaction
+    * takes the renewed `UpsertWriter.DefaultLeaseMs`. */
+  private[graft] val AppendLeaseMs: Long = 10L * 1000L
+
   /** One object as a Dataset-verb row: its type, and the rest as JSON
     * (type and spec_version never become columns, splitter.py:240-241). */
   private def objRow(o: Map[String, Any]): (String, String) =

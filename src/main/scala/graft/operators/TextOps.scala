@@ -1836,7 +1836,11 @@ object TextOps {
           .as("qlog"))
     val priors = docs.groupBy(col(labelCol).as("label")).agg(count(lit(1)).as("nd"))
     val nDocs = priors.agg(sum("nd").cast("double").as("n"))
-    val labelModel = priors.crossJoin(nDocs).join(totals, "label").crossJoin(broadcast(vocab))
+    // priors is the join's build side by hint: left to AQE, the two sides'
+    // equal sizes let stage timing flip the choice, and the flipped plan
+    // broadcast totals in one more job (q_text_calibration started 34 jobs
+    // in some runs and 35 in others)
+    val labelModel = broadcast(priors).join(totals, "label").crossJoin(nDocs).crossJoin(broadcast(vocab))
       .select(
         col("label"),
         quant(col("nd").cast("double") / col("n")).as("qprior"),

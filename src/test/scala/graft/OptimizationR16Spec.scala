@@ -3,6 +3,8 @@ package graft
 import graft.api.Storage
 import graft.ingest.UpsertWriter
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Millis, Span}
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -10,7 +12,7 @@ import scala.jdk.CollectionConverters._
   * + construction-time compaction must be replay-invisible) and the upsert
   * no-change fast path (an idempotent re-upsert leaves every stored file
   * byte-stable; a genuine change still rewrites). */
-class OptimizationR16Spec extends SparkSpec {
+class OptimizationR16Spec extends SparkSpec with TimeLimits {
 
   private val bundle =
     """{"type":"bundle","id":"bundle--ob1","objects":[
@@ -99,6 +101,40 @@ class OptimizationR16Spec extends SparkSpec {
       s.setAppdata("gv", """{"notes":"x"}""")
       val s3 = new Storage(spark, dir)
       assert(s3.getAppdata("gv").contains("""{"notes":"x"}"""))
+    }
+  }
+
+  test("journal: a holder that dies mid-append blocks the next append for seconds, not minutes") {
+    withTempDir("graft-jnl5") { dir =>
+      val s = new Storage(spark, dir)
+      s.cache("q1", bundle)
+      // crash through the fs seam right after the append's lease is created
+      class InjectedCrash extends RuntimeException("injected crash")
+      val L = graft.ingest.LocalTableFs
+      UpsertWriter.fs = new graft.ingest.TableFs {
+        def put(p: Path, c: Array[Byte]): Unit = L.put(p, c)
+        def createNew(p: Path, c: Array[Byte]): Unit = {
+          L.createNew(p, c)
+          if (p.getFileName.toString == "__symtable.jsonl.lease") throw new InjectedCrash
+        }
+        def move(a: Path, b: Path): Unit = L.move(a, b)
+        def moveReplace(a: Path, b: Path): Unit = L.moveReplace(a, b)
+        def deleteIfExists(p: Path): Unit = L.deleteIfExists(p)
+        def deleteTree(p: Path): Unit = L.deleteTree(p)
+        def mkdirs(p: Path): Unit = L.mkdirs(p)
+        def copyTree(a: Path, b: Path): Unit = L.copyTree(a, b)
+      }
+      try intercept[InjectedCrash](s.extract("urls", "url", "q1", null))
+      finally UpsertWriter.fs = L
+      assert(Files.exists(Paths.get(dir, "__symtable.jsonl.lease")), "the dead holder's lease stays")
+      // the restart appends once the dead holder's short window has passed;
+      // under a ten-minute window it would wait that long, so it fails here
+      implicit val signaler: Signaler = ThreadSignaler
+      failAfter(Span(Storage.AppendLeaseMs * 3, Millis)) {
+        new Storage(spark, dir).extract("ips", "ipv4-addr", "q1", null)
+      }
+      assert(journalLines(dir).exists(_.contains("\"ips\"")))
+      assert(!Files.exists(Paths.get(dir, "__symtable.jsonl.lease")))
     }
   }
 

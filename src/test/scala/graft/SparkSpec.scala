@@ -29,17 +29,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** `body`'s result and the number of Spark jobs it launched. */
   def countJobs[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(counter)
-    val out =
-      try { val r = body; org.apache.spark.TestListenerBus.drain(spark.sparkContext); r }
-      finally spark.sparkContext.removeSparkListener(counter)
-    (out, jobs.get())
+    val (out, report) = SparkSpec.meter.measure("countJobs")(body)
+    (out, report.counts.jobs)
   }
 
   /** What two ingest verbs must agree on for the same objects: every
@@ -81,4 +72,7 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The session's one [[graft.Meter]]. */
+  lazy val meter: Meter = Meter.install(session)
 }

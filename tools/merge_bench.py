@@ -2,8 +2,10 @@
 """Merge Bench's self-delimiting chunk lines into the single-object form
 scaling_report.py consumes: {'queries': {...}, 'sf': ..., 'reps': ...}.
 Usage: python3 tools/merge_bench.py [--partial] <raw_lines_file> <out.json>
-Accepts either the chunked form (N chunk lines + one total line) or the
-single-line form; fails loudly on missing parts unless --partial is given
+Accepts the chunked form (N chunk lines + one total line), the complete
+`record` line (Bench's last stdout line, or a BENCH_SELF.json — also one a
+killed run left after its last finished pass), or the older single-line
+`total` form; fails loudly on missing parts unless --partial is given
 (a truncated capture window is then emitted with partial: true — the
 common-window input scaling_report --compare consumes)."""
 import json, sys
@@ -43,6 +45,12 @@ for line in open(raw):
         queries.update(rec['queries'])
         parts_seen += 1
         parts_expected = rec['parts']
+    elif rec.get('metric') == 'record':
+        # the complete record: self-contained, never merged with stale
+        # partial chunks from an aborted prior run
+        total = rec
+        queries = dict(rec['queries'])
+        parts_seen, parts_expected = 0, None
     elif rec.get('metric') == 'total':
         if total is not None:
             # second run in single-line form: the later complete run wins,
@@ -69,6 +77,9 @@ if truncated:  # --partial: a capture-window slice, flagged as such
     merged['parts_expected'] = parts_expected
 if total.get('calib_sec') is not None:  # fixed-work box-speed probe
     merged['calib_sec'] = total['calib_sec']
+for k in ('passes', 'counts'):  # a record's passes done and Spark counts
+    if k in total:
+        merged[k] = total[k]
 with open(out, 'w') as f:
     json.dump(merged, f, indent=1)
 print(f"{out}: {total['value']}s / {len(queries)} queries / reps={total.get('reps')}")
